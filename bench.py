@@ -565,7 +565,7 @@ def main():
     n_records = int(os.environ.get("SIRIX_SPARK_RECORDS_N", 100_000_000))
 
     try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 0)
     except ValueError:
         cpus = os.cpu_count() or 0
     out = {

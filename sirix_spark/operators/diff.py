@@ -2,16 +2,35 @@
 the reference's BasicJsonDiff.java:21 / JsonDiffSerializer.java (a
 changed leaf yields ONE op for that leaf, not a whole-record update).
 
-Spark-first design: no recursion and no Python. A JSON document is
-flattened into (path, kind, value) node rows by a bounded-depth
-iterative expansion built entirely from JVM expressions —
-`from_json(js, 'map<string,string>')` preserves nested objects/arrays
-as their JSON text (verified behavior), so each level is one narrow
-projection + explode. Old and new node sets then meet in a single
-full-outer shuffle join on (id, path); op classification and
-redundant-child suppression are two more joins over the (small) diff
-output. Scale: cost is O(total nodes) map work + one shuffle by
-(id, path) — never proportional to document count × document size².
+Spark-first design: no recursion and no Python. The plan has three
+steps, and its size is fixed by `max_depth`, never by the data:
+
+1. Prune. Rows whose old and new documents are equal (`eqNullSafe`)
+   cannot yield an op, so they are dropped before anything is
+   flattened; an update that touches 1% of the records flattens 1%.
+2. Flatten, one generator per side. Each document becomes an array of
+   its (path, kind, value) nodes, built level by level from JVM
+   higher-order functions: `from_json(js, 'map<string,string>')`
+   keeps nested objects/arrays as their JSON text, so the children of
+   a level are one `transform` over that level's entries. Object and
+   array entries are unified into one (key, text) array *before* the
+   next level recurses (two branches per level would make the
+   expression exponential in depth). Each level is its own column, so
+   it is computed once however many later levels read it. One
+   `inline` then emits every node of the document.
+3. Match. Old and new nodes meet in one full-outer join on
+   (id, path); op classification is a projection, and redundant-child
+   suppression is one more join of each candidate op to its parent.
+
+Cost model: per document, O(size × depth) bytes of JSON parsing
+(each internal node's text is parsed once, at its own level) plus
+O(nodes) array work — no per-key lookups, so a single document with
+tens of thousands of keys stays linear. Across documents: one shuffle
+by (id, path) for the match and one by (id, parent path) for the
+suppression, over the changed documents only. Plan size grows with
+max_depth (one projection per level), never with the data. The
+suppression join reads the matched node set a second time, so each
+side is flattened twice.
 
 Caveat (documented): scalar values are compared through the map's
 string coercion, so a *string* leaf whose content looks like a JSON
@@ -28,9 +47,24 @@ from pyspark.sql import functions as F
 
 MAX_DEPTH = 8
 
+# Children of an object or array node `n`: one (path, js) struct per
+# entry, array positions keyed '[i]'. Object and array entries are
+# unified into one array before the next level reads them; text that
+# does not parse has no children.
+_CHILDREN = """transform(
+  coalesce(
+    CASE WHEN startswith(n.js, '{')
+      THEN map_entries(from_json(n.js, 'map<string,string>'))
+      ELSE transform(from_json(n.js, 'array<string>'),
+                     (v, i) -> named_struct('key', concat('[', CAST(i AS STRING), ']'), 'value', v))
+    END,
+    CAST(array() AS array<struct<key:string,value:string>>)),
+  e -> named_struct('path', concat(n.path, '/', e.key), 'js', trim(e.value)))"""
 
-def _starts(col, ch: str):
-    return F.startswith(col, F.lit(ch))
+_INTERNAL = "startswith(n.js, '{') OR startswith(n.js, '[')"
+
+_KIND = """CASE WHEN startswith(n.js, '{') THEN 'object'
+  WHEN startswith(n.js, '[') THEN 'array' ELSE 'leaf' END"""
 
 
 def flatten_json(
@@ -52,51 +86,24 @@ def flatten_json(
     leaf whose value is its JSON text (diff still sees changes, just
     coarser below the bound).
     """
-    ids = [F.col(c) for c in id_cols]
-    frontier = df.filter(F.col(js_col).isNotNull()).select(
-        *ids, F.lit("").alias("path"), F.trim(F.col(js_col)).alias("js")
+    ids = [f"`{c}`" for c in id_cols]
+    out = df.filter(F.col(js_col).isNotNull()).selectExpr(
+        *ids, f"array(named_struct('path', '', 'js', trim(`{js_col}`))) AS _l0"
     )
-    levels: list[DataFrame] = []
-    for depth in range(max_depth):
-        js = F.col("js")
-        kind = (
-            F.when(_starts(js, "{"), F.lit("object"))
-            .when(_starts(js, "["), F.lit("array"))
-            .otherwise(F.lit("leaf"))
+    for d in range(1, max_depth):
+        out = out.selectExpr(
+            "*",
+            f"flatten(transform(filter(_l{d - 1}, n -> {_INTERNAL}), n -> {_CHILDREN})) AS _l{d}",
         )
-        nodes = frontier.select(*ids, "path", kind.alias("kind"), js.alias("value"))
-        levels.append(nodes)
-        expandable = frontier.filter(_starts(js, "{") | _starts(js, "["))
-        if depth == max_depth - 1:
-            break
-        obj_entries = F.map_entries(F.from_json(js, "map<string,string>"))
-        arr_entries = F.transform(
-            F.from_json(js, "array<string>"),
-            lambda v, i: F.struct(
-                F.concat(F.lit("["), i.cast("string"), F.lit("]")).alias("key"),
-                v.alias("value"),
-            ),
-        )
-        entries = F.when(_starts(js, "{"), obj_entries).otherwise(arr_entries)
-        frontier = expandable.select(
-            *ids, "path", F.explode(entries).alias("e")
-        ).select(
-            *ids,
-            F.concat(F.col("path"), F.lit("/"), F.col("e.key")).alias("path"),
-            F.trim(F.col("e.value")).alias("js"),
-        )
-    out = reduce(lambda a, b: a.unionByName(b), levels)
-    # Nodes at the last emitted level (depth max_depth-1) were never
-    # expanded: compare them as opaque leaves (value = JSON text) so
-    # changes below the bound still surface as an update.
-    return out.withColumn(
-        "kind",
-        F.when(
-            (F.length("path") - F.length(F.regexp_replace("path", "/", "")))
-            >= max_depth - 1,
-            F.lit("leaf"),
-        ).otherwise(F.col("kind")),
-    )
+    # Nodes at the last level were never expanded: compare them as
+    # opaque leaves (value = JSON text) so changes below the bound
+    # still surface as an update.
+    kinds = [_KIND] * (max_depth - 1) + ["'leaf'"]
+    nodes = [
+        f"transform(_l{d}, n -> named_struct('path', n.path, 'kind', {kind}, 'value', n.js))"
+        for d, kind in enumerate(kinds)
+    ]
+    return out.selectExpr(*ids, f"inline(concat({', '.join(nodes)}))")
 
 
 def json_node_diff(
@@ -125,15 +132,15 @@ def json_node_diff(
     sufficient by induction, so ONE extra self-join, not a recursive
     prefix walk.
     """
-    o = flatten_json(df, id_cols, old_col, max_depth).withColumnsRenamed(
+    changed = df.filter(~F.col(old_col).eqNullSafe(F.col(new_col)))
+    o = flatten_json(changed, id_cols, old_col, max_depth).withColumnsRenamed(
         {"kind": "old_kind", "value": "old_value"}
     )
-    n = flatten_json(df, id_cols, new_col, max_depth).withColumnsRenamed(
+    n = flatten_json(changed, id_cols, new_col, max_depth).withColumnsRenamed(
         {"kind": "new_kind", "value": "new_value"}
     )
     j = o.join(n, [*id_cols, "path"], "full_outer")
 
-    both = F.col("old_kind").isNotNull() & F.col("new_kind").isNotNull()
     op = (
         F.when(F.col("old_kind").isNull(), F.lit("insert"))
         .when(F.col("new_kind").isNull(), F.lit("delete"))

@@ -60,8 +60,8 @@ def node_diff(spark, sf_dir):
         doc("n_v", "n_t", "n_n").alias("new_doc"),
     )
     # The state documents are depth-1 objects; a tight depth bound
-    # keeps the flatten at 2 levels instead of the default 8 (the
-    # level loop is plan size, not data — see operators/diff.py).
+    # keeps the flatten at 3 levels instead of the default 8 (each
+    # level is one more projection in the plan — see operators/diff.py).
     return json_node_diff(docs, ["user_id"], "old_doc", "new_doc", max_depth=3)
 
 

@@ -9,6 +9,13 @@ The manifest is tiny (one entry per commit) and driver-side; writes
 are atomic via tmp+rename. Single-writer semantics, like the
 reference's one-write-transaction-per-resource model
 (JsonNodeTrx.java).
+
+Schemas live in the catalog, as in Delta's and Iceberg's table
+metadata: each entry records the Spark schema of every part its commit
+wrote (`data/`, `upserts/`, `deletes/`), so opening a revision reads
+its parquet with a known schema instead of launching one
+schema-inference Spark job per part. Entries written before schemas
+were recorded carry none; readers infer theirs.
 """
 
 from __future__ import annotations
@@ -17,6 +24,8 @@ import json
 import os
 from dataclasses import asdict, dataclass
 from datetime import datetime, timezone
+
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -28,6 +37,14 @@ class RevisionEntry:
     kind: str  # "checkpoint" | "delta"
     n_upserts: int = 0
     n_deletes: int = 0
+    # part name ("data" | "upserts" | "deletes") → StructType JSON
+    schemas: dict[str, str] | None = None
+
+    def schema(self, part: str) -> StructType | None:
+        """Recorded schema of a part, or None if the entry predates
+        schema recording."""
+        js = (self.schemas or {}).get(part)
+        return None if js is None else StructType.fromJson(json.loads(js))
 
     @property
     def committed_at_dt(self) -> datetime:

@@ -29,6 +29,14 @@ Physical design (scale-first):
   (docs/ARCHITECTURE.md:1560).
 - Snapshots are plain parquet: columnar, stats-pruned — the
   "projection index is the storage itself" property (SURVEY.md §1.3).
+- Schemas live in the revision catalog (manifest.py), as in Delta's
+  and Iceberg's table metadata: a commit records the Spark schema of
+  each part it wrote, read back from the written files, and doc() /
+  change_view() read every part with it. A bare parquet read would
+  launch a schema-inference Spark job per part — one per merged delta
+  — before the query runs; with recorded schemas building doc(r)
+  launches none, at any depth. Revisions committed before schemas
+  were recorded are read with inference.
 - Record identity: a caller-designated key column is renamed to
   `record_key` (the stable 64-bit nodeKey analog,
   docs/ARCHITECTURE.md:70-100).
@@ -143,9 +151,8 @@ class VersionedStore:
             shutil.rmtree(self._res_path(db, res), ignore_errors=True)
             os.makedirs(self._res_path(db, res), exist_ok=True)
         keyed = df.withColumnRenamed(key, RECORD_KEY)
-        path = self._rev_dir(db, res, 1)
-        keyed.write.mode("errorifexists").parquet(os.path.join(path, "data"))
-        n = keyed.count()
+        schemas: dict[str, str] = {}
+        n = self._write_part(self._rev_dir(db, res, 1), "data", keyed, schemas).count()
         manifest = self._manifest(db, res)
         manifest.append(
             RevisionEntry(
@@ -155,6 +162,7 @@ class VersionedStore:
                 message=message,
                 kind="checkpoint",
                 n_upserts=n,
+                schemas=schemas,
             )
         )
         return 1
@@ -172,6 +180,43 @@ class VersionedStore:
         is spark.read.json's multi-task parse for free)."""
         df = self.spark.read.json(json_path)
         return self.store(db, res, df, key=key, **kw)
+
+    def _write_part(
+        self, rev_path: str, part: str, df: DataFrame, schemas: dict[str, str]
+    ) -> DataFrame:
+        """Write one part (data/, upserts/ or deletes/) of a commit and
+        read it back. The read-back gives footer-metadata counts
+        without re-running the plan that produced `df`, and the schema
+        the manifest records for the part (`schemas[part]`)."""
+        path = os.path.join(rev_path, part)
+        df.write.mode("errorifexists").parquet(path)
+        written = self.spark.read.parquet(path)
+        schemas[part] = written.schema.json()
+        return written
+
+    def _read_part(self, db: str, res: str, entry: RevisionEntry, part: str) -> DataFrame:
+        """Read one part of a committed revision with the schema its
+        manifest entry recorded (no schema-inference job); entries
+        from before schemas were recorded fall back to inference."""
+        path = os.path.join(self._rev_dir(db, res, entry.revision), part)
+        schema = entry.schema(part)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(path)
+
+    @staticmethod
+    def _tag(df: DataFrame, revision: int, deleted: bool) -> DataFrame:
+        return df.withColumns({REVISION_COL: F.lit(revision), DELETED_COL: F.lit(deleted)})
+
+    @staticmethod
+    def _tombstones(keys: DataFrame, dtypes: list[tuple[str, str]]) -> DataFrame:
+        """Deleted keys shaped as records with the columns `dtypes`
+        and a NULL payload, so they union with the records."""
+        return keys.select(
+            *[
+                F.col(c) if c == RECORD_KEY else F.lit(None).cast(t).alias(c)
+                for c, t in dtypes
+            ]
+        )
 
     def _write_commit(
         self,
@@ -193,68 +238,50 @@ class VersionedStore:
         checkpoint = force_checkpoint or (rev % self.checkpoint_every == 0)
         path = self._rev_dir(db, res, rev)
         n_up = n_del = 0
+        schemas: dict[str, str] = {}
         if full_state:
             # `upserts` IS the complete new state (schema-changing
             # commits like rename): write it as a checkpoint directly.
-            data_path = os.path.join(path, "data")
-            upserts.write.mode("errorifexists").parquet(data_path)
-            # count the WRITTEN files, not the plan: parquet count is
+            # Count the WRITTEN files, not the plan: parquet count is
             # footer-metadata-only, so this avoids re-running the
             # upstream computation a second time.
-            n_up = self.spark.read.parquet(data_path).count()
-            kind = "checkpoint"
-        elif checkpoint:
-            # Write the DELTA sidecar (upserts/ + deletes/) first,
-            # then the materialized full state (data/). The sidecar
-            # lets change_view read ONE file per checkpoint commit
-            # instead of recovering the delta with an exceptAll
-            # against a merge-on-read doc() — keeping change_view/
-            # history_view plans O(total changes) regardless of the
-            # checkpoint interval. Reading the written sidecar back
-            # also yields footer-metadata counts and feeds the state
-            # merge without re-evaluating the upsert plan.
-            if upserts is not None:
-                up_path = os.path.join(path, "upserts")
-                upserts.write.mode("errorifexists").parquet(up_path)
-                upserts = self.spark.read.parquet(up_path)
-                n_up = upserts.count()
-            if delete_keys is not None:
-                del_path = os.path.join(path, "deletes")
-                delete_keys.select(RECORD_KEY).write.mode("errorifexists").parquet(
-                    del_path
-                )
-                delete_keys = self.spark.read.parquet(del_path)
-                n_del = delete_keys.count()
-            prev = self.doc(db, res, revision=rev - 1)
-            state = prev
-            if delete_keys is not None:
-                state = state.join(
-                    delete_keys.select(RECORD_KEY), RECORD_KEY, "left_anti"
-                )
-            if upserts is not None:
-                # allowMissingColumns: new fields appear as NULL on
-                # old records — the dynamic-schema growth the
-                # reference tracks in its path summary
-                # (PathSummaryWriter.java / mergeSchema).
-                state = state.join(
-                    upserts.select(RECORD_KEY), RECORD_KEY, "left_anti"
-                ).unionByName(upserts, allowMissingColumns=True)
-            state.write.mode("errorifexists").parquet(os.path.join(path, "data"))
+            n_up = self._write_part(path, "data", upserts, schemas).count()
             kind = "checkpoint"
         else:
+            # Write the DELTA (upserts/ + deletes/). A checkpoint
+            # commit writes it too, as a sidecar next to the
+            # materialized full state (data/): the sidecar lets
+            # change_view read ONE file per checkpoint commit instead
+            # of recovering the delta with an exceptAll against a
+            # merge-on-read doc() — keeping change_view/history_view
+            # plans O(total changes) regardless of the checkpoint
+            # interval. Reading the written delta back also yields
+            # footer-metadata counts and feeds the state merge without
+            # re-evaluating the upsert plan.
             if upserts is not None:
-                up_path = os.path.join(path, "upserts")
-                upserts.write.mode("errorifexists").parquet(up_path)
-                # footer-metadata count of the written delta — no
-                # second evaluation of the upsert plan
-                n_up = self.spark.read.parquet(up_path).count()
+                upserts = self._write_part(path, "upserts", upserts, schemas)
+                n_up = upserts.count()
             if delete_keys is not None:
-                del_path = os.path.join(path, "deletes")
-                delete_keys.select(RECORD_KEY).write.mode("errorifexists").parquet(
-                    del_path
+                delete_keys = self._write_part(
+                    path, "deletes", delete_keys.select(RECORD_KEY), schemas
                 )
-                n_del = self.spark.read.parquet(del_path).count()
-            kind = "delta"
+                n_del = delete_keys.count()
+            if checkpoint:
+                state = self.doc(db, res, revision=rev - 1)
+                if delete_keys is not None:
+                    state = state.join(
+                        delete_keys.select(RECORD_KEY), RECORD_KEY, "left_anti"
+                    )
+                if upserts is not None:
+                    # allowMissingColumns: new fields appear as NULL on
+                    # old records — the dynamic-schema growth the
+                    # reference tracks in its path summary
+                    # (PathSummaryWriter.java / mergeSchema).
+                    state = state.join(
+                        upserts.select(RECORD_KEY), RECORD_KEY, "left_anti"
+                    ).unionByName(upserts, allowMissingColumns=True)
+                self._write_part(path, "data", state, schemas)
+            kind = "checkpoint" if checkpoint else "delta"
         manifest.append(
             RevisionEntry(
                 revision=rev,
@@ -264,6 +291,7 @@ class VersionedStore:
                 kind=kind,
                 n_upserts=n_up,
                 n_deletes=n_del,
+                schemas=schemas,
             )
         )
         return rev
@@ -348,31 +376,19 @@ class VersionedStore:
             raise KeyError(f"resource {db}/{res} has no revisions")
         manifest.entry(revision)  # bounds check
         ckpt = manifest.latest_checkpoint_at_or_before(revision)
-        base_path = os.path.join(self._rev_dir(db, res, ckpt), "data")
-        base = self.spark.read.parquet(base_path)
+        base = self._read_part(db, res, manifest.entry(ckpt), "data")
         if ckpt == revision:
             return base
-        parts = [base.withColumn(REVISION_COL, F.lit(ckpt)).withColumn(DELETED_COL, F.lit(False))]
+        parts = [self._tag(base, ckpt, False)]
         for r in range(ckpt + 1, revision + 1):
             e = manifest.entry(r)
-            rd = self._rev_dir(db, res, r)
             if e.kind == "checkpoint":  # unreachable (ckpt is latest), safety
                 continue
             if e.n_upserts:
-                up = self.spark.read.parquet(os.path.join(rd, "upserts"))
-                parts.append(
-                    up.withColumn(REVISION_COL, F.lit(r)).withColumn(DELETED_COL, F.lit(False))
-                )
+                parts.append(self._tag(self._read_part(db, res, e, "upserts"), r, False))
             if e.n_deletes:
-                dl = self.spark.read.parquet(os.path.join(rd, "deletes"))
-                for c in base.columns:
-                    if c != RECORD_KEY:
-                        dl = dl.withColumn(c, F.lit(None).cast(dict(base.dtypes)[c]))
-                parts.append(
-                    dl.select(base.columns)
-                    .withColumn(REVISION_COL, F.lit(r))
-                    .withColumn(DELETED_COL, F.lit(True))
-                )
+                dl = self._read_part(db, res, e, "deletes")
+                parts.append(self._tag(self._tombstones(dl, base.dtypes), r, True))
         unioned = parts[0]
         for p in parts[1:]:
             unioned = unioned.unionByName(p, allowMissingColumns=True)
@@ -429,12 +445,8 @@ class VersionedStore:
         change view instead."""
         manifest = self._manifest(db, res)
         last = max_revision or manifest.latest_revision()
-        first_ckpt_path = os.path.join(self._rev_dir(db, res, 1), "data")
-        base = self.spark.read.parquet(first_ckpt_path)
-        payload_types = dict(base.dtypes)
-        parts = [
-            base.withColumn(REVISION_COL, F.lit(1)).withColumn(DELETED_COL, F.lit(False))
-        ]
+        base = self._read_part(db, res, manifest.entry(1), "data")
+        parts = [self._tag(base, 1, False)]
         for r in range(2, last + 1):
             e = manifest.entry(r)
             rd = self._rev_dir(db, res, r)
@@ -448,43 +460,17 @@ class VersionedStore:
                 # against r-1. Cadence checkpoints DO write their
                 # sidecar (store._write_commit) and fall through to
                 # the one-scan delta path below.
-                snap = self.spark.read.parquet(os.path.join(rd, "data"))
+                snap = self._read_part(db, res, e, "data")
                 prev = self.doc(db, res, revision=r - 1)
-                changed = snap.exceptAll(prev)
-                parts.append(
-                    changed.withColumn(REVISION_COL, F.lit(r)).withColumn(
-                        DELETED_COL, F.lit(False)
-                    )
-                )
+                parts.append(self._tag(snap.exceptAll(prev), r, False))
                 deleted = prev.select(RECORD_KEY).subtract(snap.select(RECORD_KEY))
-                if payload_types:
-                    dl = deleted
-                    for c in base.columns:
-                        if c != RECORD_KEY:
-                            dl = dl.withColumn(c, F.lit(None).cast(payload_types[c]))
-                    parts.append(
-                        dl.select(base.columns)
-                        .withColumn(REVISION_COL, F.lit(r))
-                        .withColumn(DELETED_COL, F.lit(True))
-                    )
+                parts.append(self._tag(self._tombstones(deleted, base.dtypes), r, True))
                 continue
             if os.path.exists(up_path):
-                up = self.spark.read.parquet(up_path)
-                parts.append(
-                    up.withColumn(REVISION_COL, F.lit(r)).withColumn(
-                        DELETED_COL, F.lit(False)
-                    )
-                )
+                parts.append(self._tag(self._read_part(db, res, e, "upserts"), r, False))
             if os.path.exists(del_path):
-                dl = self.spark.read.parquet(del_path)
-                for c in base.columns:
-                    if c != RECORD_KEY:
-                        dl = dl.withColumn(c, F.lit(None).cast(payload_types[c]))
-                parts.append(
-                    dl.select(base.columns)
-                    .withColumn(REVISION_COL, F.lit(r))
-                    .withColumn(DELETED_COL, F.lit(True))
-                )
+                dl = self._read_part(db, res, e, "deletes")
+                parts.append(self._tag(self._tombstones(dl, base.dtypes), r, True))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)
@@ -608,6 +594,14 @@ class VersionedStore:
         import json as _json
 
         if mode == "node":
+            # Sorted on the driver, where the ops land anyway: a Spark
+            # orderBy would add a range-partition sampling job and a
+            # shuffle. (key, path) is unique per op; NULLs first, as
+            # in Spark's ascending order.
+            rows = sorted(
+                self.node_diff(db, res, r1, r2).collect(),
+                key=lambda r: (r[RECORD_KEY] is not None, r[RECORD_KEY], r["path"]),
+            )
             ops = [
                 {
                     "type": r["op"],
@@ -616,9 +610,7 @@ class VersionedStore:
                     **({"old": r["old_value"]} if r["old_value"] is not None else {}),
                     **({"new": r["new_value"]} if r["new_value"] is not None else {}),
                 }
-                for r in self.node_diff(db, res, r1, r2)
-                .orderBy(RECORD_KEY, "path")
-                .collect()
+                for r in rows
             ]
         else:
             ops = [

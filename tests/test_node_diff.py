@@ -8,9 +8,11 @@ from __future__ import annotations
 import json
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from sirix_spark.operators.diff import json_node_diff
+from sirix_spark.operators.diff import MAX_DEPTH, json_node_diff
 
 
 def _kind(x):
@@ -27,41 +29,94 @@ def _jtext(x):
     return json.dumps(x, separators=(",", ":"))
 
 
-def _value_of(x):
-    return _leafstr(x) if _kind(x) == "leaf" else _jtext(x)
+def _tree(x, depth, max_depth):
+    """(kind, value, children) of a value as the operator sees it:
+    containers carry their compact JSON text, a string whose text
+    starts with '{' or '[' is a subtree (the documented caveat; text
+    that does not parse has no children), and a node at the depth
+    bound is an opaque leaf holding its text."""
+    if isinstance(x, str) and x.strip(" ")[:1] in ("{", "["):
+        text = x.strip(" ")
+        kind = "object" if text[0] == "{" else "array"
+        try:
+            parsed = json.loads(text)
+        except ValueError:
+            parsed = None
+        if not isinstance(parsed, dict if kind == "object" else list):
+            parsed = {} if kind == "object" else []
+    elif isinstance(x, (dict, list)):
+        kind, text, parsed = _kind(x), _jtext(x), x
+    else:  # the operator trims spaces off every node's text
+        leaf = _leafstr(x)
+        return ("leaf", leaf.strip(" ") if isinstance(x, str) else leaf, {})
+    if depth == max_depth - 1:
+        return ("leaf", text, {})
+    items = parsed.items() if kind == "object" else (
+        (f"[{i}]", v) for i, v in enumerate(parsed)
+    )
+    return (kind, text, {k: _tree(v, depth + 1, max_depth) for k, v in items})
 
 
-def model_diff(old, new, path=""):
-    """Python reference model of the operator's semantics: top-most
-    insert/delete, per-leaf update, kind-change replace."""
-    if old is None and _kind(old) == "leaf" and new is None:
-        return []
-    if _kind(old) != _kind(new):
-        return [(path, "replace", _value_of(old), _value_of(new))]
-    if _kind(old) == "leaf":
-        if _leafstr(old) != _leafstr(new):
-            return [(path, "update", _leafstr(old), _leafstr(new))]
-        return []
+def _tree_ops(o, n, path):
+    (ok, ov, oc), (nk, nv, nc) = o, n
+    if ok != nk:
+        return [(path, "replace", ov, nv)]
+    if ok == "leaf":
+        return [(path, "update", ov, nv)] if ov != nv else []
     ops = []
-    if isinstance(old, dict):
-        for k in set(old) | set(new):
-            p = f"{path}/{k}"
-            if k not in old:
-                ops.append((p, "insert", None, _value_of(new[k])))
-            elif k not in new:
-                ops.append((p, "delete", _value_of(old[k]), None))
-            else:
-                ops += model_diff(old[k], new[k], p)
-    else:
-        for i in range(max(len(old), len(new))):
-            p = f"{path}/[{i}]"
-            if i >= len(old):
-                ops.append((p, "insert", None, _value_of(new[i])))
-            elif i >= len(new):
-                ops.append((p, "delete", _value_of(old[i]), None))
-            else:
-                ops += model_diff(old[i], new[i], p)
+    for k in {**oc, **nc}:
+        p = f"{path}/{k}"
+        if k not in oc:
+            ops.append((p, "insert", None, nc[k][1]))
+        elif k not in nc:
+            ops.append((p, "delete", oc[k][1], None))
+        else:
+            ops += _tree_ops(oc[k], nc[k], p)
     return ops
+
+
+def _doc(x, max_depth):
+    # the root node is the document's JSON text (a scalar document is
+    # a leaf holding that text, quotes included)
+    return _tree(_jtext(x), 0, max_depth)
+
+
+def model_diff(old, new, max_depth=MAX_DEPTH):
+    """Python reference model of the operator's semantics for two
+    present documents: top-most insert/delete, per-leaf update,
+    kind-change replace, subtrees below the depth bound compared as
+    text."""
+    return _tree_ops(_doc(old, max_depth), _doc(new, max_depth), "")
+
+
+def expected_ops(pairs, max_depth=MAX_DEPTH):
+    """{(id, path): (op, old, new)} the operator must return for
+    {id: (old_doc, new_doc)}; None is an absent document."""
+    out = {}
+    for i, (o, n) in pairs.items():
+        if o is None and n is None:
+            continue
+        if o is None:
+            out[(i, "")] = ("insert", None, _jtext(n))
+        elif n is None:
+            out[(i, "")] = ("delete", _jtext(o), None)
+        else:
+            for path, op, ov, nv in model_diff(o, n, max_depth):
+                out[(i, path)] = (op, ov, nv)
+    return out
+
+
+def run_diff(spark, pairs, max_depth=MAX_DEPTH):
+    rows = [
+        (i, _jtext(o) if o is not None else None, _jtext(n) if n is not None else None)
+        for i, (o, n) in pairs.items()
+    ]
+    df = spark.createDataFrame(rows, "id long, old_doc string, new_doc string")
+    out = json_node_diff(df, ["id"], "old_doc", "new_doc", max_depth=max_depth)
+    return {
+        (r["id"], r["path"]): (r["op"], r["old_value"], r["new_value"])
+        for r in out.collect()
+    }
 
 
 CASES = {
@@ -80,31 +135,112 @@ CASES = {
 
 @pytest.fixture(scope="module")
 def diff_rows(spark):
-    rows = [
-        (i, _jtext(o) if o is not None else None, _jtext(n) if n is not None else None)
-        for i, (o, n) in CASES.items()
-    ]
-    df = spark.createDataFrame(rows, "id long, old_doc string, new_doc string")
-    out = json_node_diff(df, ["id"], "old_doc", "new_doc")
-    return {
-        (r["id"], r["path"]): (r["op"], r["old_value"], r["new_value"])
-        for r in out.collect()
-    }
+    return run_diff(spark, CASES)
 
 
 def test_node_diff_matches_model(diff_rows):
-    expected = {}
-    for i, (o, n) in CASES.items():
-        if o is None and n is None:
-            continue
-        if o is None:
-            expected[(i, "")] = ("insert", None, _value_of(n))
-        elif n is None:
-            expected[(i, "")] = ("delete", _value_of(o), None)
-        else:
-            for path, op, ov, nv in model_diff(o, n):
-                expected[(i, path)] = (op, ov, nv)
-    assert diff_rows == expected
+    assert diff_rows == expected_ops(CASES)
+
+
+# --- property test: random documents against the model --------------
+_KEYS = st.text(alphabet="abxy", min_size=1, max_size=2)
+# Strings that look like JSON (valid, malformed, padded, empty
+# containers) exercise the documented string-as-subtree caveat.
+_JSONISH = st.sampled_from(
+    ["{", "[", "{}", "[]", "{x", "[1,", " [1, 2]", '{"a": [true, null]}', "null", "7"]
+)
+_LEAVES = st.one_of(
+    st.none(),
+    st.booleans(),
+    st.integers(-3, 3),
+    st.text(alphabet='ab {}[]":,', max_size=5),
+    _JSONISH,
+)
+
+
+def _json(depth):
+    if depth == 0:
+        return _LEAVES
+    sub = _json(depth - 1)
+    return st.one_of(
+        _LEAVES,
+        st.lists(sub, max_size=3),
+        st.dictionaries(_KEYS, sub, max_size=3),
+        # JSON text of a real value, stored as a string leaf
+        st.lists(sub, max_size=2).map(_jtext),
+    )
+
+
+def _chain(leaf, depth):
+    """A document nested `depth` levels deep (past MAX_DEPTH)."""
+    doc = leaf
+    for d in range(depth):
+        doc = {"k": doc} if d % 2 else [doc, d]
+    return doc
+
+
+_DOCS = st.one_of(
+    st.dictionaries(_KEYS, _json(3), max_size=4),
+    st.lists(_json(3), max_size=3),
+    st.builds(_chain, _LEAVES, st.integers(1, 10)),
+)
+
+
+@st.composite
+def _edit(draw, x):
+    """`x` with random local edits, so pairs share most of their
+    nodes (independent random documents mostly just replace)."""
+    action = draw(st.sampled_from(["keep", "recurse", "recurse", "replace"]))
+    if action == "replace":
+        return draw(_json(2))
+    if action == "recurse" and isinstance(x, dict):
+        out = {k: draw(_edit(v)) for k, v in x.items() if draw(st.integers(0, 4))}
+        out.update(draw(st.dictionaries(_KEYS, _json(1), max_size=1)))
+        return out
+    if action == "recurse" and isinstance(x, list):
+        out = [draw(_edit(v)) for v in x[: draw(st.integers(0, len(x)))]]
+        return out + draw(st.lists(_json(1), max_size=1))
+    return x
+
+
+@st.composite
+def _pairs(draw):
+    docs = draw(st.lists(st.one_of(st.none(), _DOCS), min_size=1, max_size=8))
+    pairs = {}
+    for i, old in enumerate(docs):
+        new = draw(st.one_of(st.none(), _DOCS)) if old is None else draw(
+            st.one_of(_edit(old), st.none(), _DOCS)
+        )
+        pairs[i] = (old, new)
+    return pairs
+
+
+@settings(
+    max_examples=12,
+    deadline=None,
+    derandomize=True,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
+)
+@given(pairs=_pairs(), max_depth=st.sampled_from([2, 3, MAX_DEPTH]))
+def test_node_diff_property(spark, pairs, max_depth):
+    assert run_diff(spark, pairs, max_depth) == expected_ops(pairs, max_depth)
+
+
+def test_node_diff_plan_shape(spark):
+    """Each side's nodes come from ONE generator over the (pruned)
+    input — no per-level union re-deriving the input plan. The parent
+    lookup joins the matched node set to itself, so the optimized plan
+    holds two copies of the (id, path) full-outer join, each fed by
+    exactly one Generate per side."""
+    rows = [(1, _jtext(o), _jtext(n)) for o, n in [CASES[1], CASES[6]]]
+    df = spark.createDataFrame(rows, "id long, old_doc string, new_doc string")
+    plan = json_node_diff(df, ["id"], "old_doc", "new_doc")._jdf.queryExecution()
+    text = plan.optimizedPlan().toString()
+    assert "Union" not in text
+    assert text.count("FullOuter") == 2
+    assert text.count("Generate inline") == 4
+    # the prune: each side flattens only rows whose documents differ
+    assert text.count("Filter (NOT (old_doc#") == 4
 
 
 def test_store_node_diff_wire_shape(spark, tmp_path):

@@ -25,6 +25,9 @@ ADVERSARIAL = [
     "word the word of word",
     "a\tb the",                      # tab is NOT a delimiter: "a\tb"
     "of\nthe",                       # newline not a delimiter either
+    "the\n",                         # final line terminators: the
+    "a\r",                           # token is "the\n", not "the"
+    "of\u2028",                      # (Java's $ would match before them)
     None,                            # NULL -> NULL both forms
 ]
 
