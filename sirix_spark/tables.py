@@ -57,7 +57,10 @@ _CACHE_TARGET_ROWS = 20_000
 # the previous fixed 8 serialized the shingle/explode map stages of
 # every dedup query on 8 of 32 cores once the corpus outgrew the
 # bench SF (8-core ratio stuck at 2.6× instead of ~4×). At sf0.1
-# (5k docs) the value is 8, exactly the old behavior.
+# (5k docs) the value is 8, exactly the old behavior. The floor is
+# the dim-table floor of 8, not the core count: below 8 cores these
+# tables keep 8 partitions, as they did before r11, so the bench
+# layout does not depend on the runner's core count.
 #
 # MAINTENANCE INVARIANT (round-7 verdict design nit): this list is
 # NAME-BASED — when a new table joins TABLES, decide explicitly
@@ -110,11 +113,17 @@ def _load_cached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _cache_parts(spark: SparkSession, name: str, rows: int) -> int:
     """Cached-table partition count (see the _CACHE_TARGET_ROWS /
-    _COMPUTE_HEAVY notes above)."""
+    _COMPUTE_HEAVY notes above), with cores = defaultParallelism:
+
+    - compute-heavy: ``max(8, min(cores, rows // _HEAVY_ROWS_PER_PART))``
+      (8 even below 8 cores);
+    - facts: ``min(cores, ceil(rows / _CACHE_TARGET_ROWS))``, at least 1;
+    - dims: ``min(8, ceil(rows / _CACHE_TARGET_ROWS))``, at least 1.
+    """
     cores = spark.sparkContext.defaultParallelism
     cap = cores if name in _FACT_TABLES else 8
     if name in _COMPUTE_HEAVY:
-        return min(cores, max(cap, rows // _HEAVY_ROWS_PER_PART))
+        return max(cap, min(cores, rows // _HEAVY_ROWS_PER_PART))
     return min(cap, -(-rows // _CACHE_TARGET_ROWS) or 1)
 
 
