@@ -32,9 +32,12 @@ the container. This is an operational front door, not a data path —
 responses are materialized on the driver exactly as the reference's
 QuerySerializer streams result sequences; use ?limit= for big reads.
 The Spark session is shared across handler threads (Spark queries are
-thread-safe; commits to one resource are serialized by the GIL-held
-manifest append, matching the reference's single-writer-per-resource
-rule, docs/ARCHITECTURE.md concurrency model).
+thread-safe). Commits to one resource are serialized by the store's
+per-resource writer lock (an `flock` held from the head read to the
+manifest append, store/manifest.py `writer_lock`), matching the
+reference's single-writer-per-resource rule (docs/ARCHITECTURE.md
+concurrency model): concurrent PUTs queue and each gets its own
+revision.
 """
 
 from __future__ import annotations

@@ -27,6 +27,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from sirix_spark.store.docnodes import nodes_df, shred_text
+from sirix_spark.store.manifest import writer_lock
 
 
 class DocStoreError(ValueError):
@@ -128,21 +129,30 @@ class DocumentStore:
             json.dump(m, f, indent=1)
         os.replace(p + ".tmp", p)
 
+    def _writer(self, db: str, res: str):
+        """The resource's writer lock (manifest.writer_lock)."""
+        if not self.exists(db, res):
+            raise DocStoreError(f"unknown resource {db}/{res}")
+        return writer_lock(self._res_dir(db, res))
+
     def recover(self, db: str, res: str) -> list[str]:
         """GC files orphaned by a commit killed before its manifest
         rename: r{n}.json / k{n}.json beyond the manifest head, and a
         stranded manifest.json.tmp. The manifest always names a
-        fully-committed prefix, so everything past it is garbage."""
+        fully-committed prefix, so everything past it is garbage. Runs
+        under the writer lock, so a commit in flight is never taken for
+        an orphan."""
         removed: list[str] = []
         d = self._res_dir(db, res)
         if not self.exists(db, res):
             return removed
-        head = self._read_manifest(db, res)["revisions"][-1]["revision"]
-        for name in sorted(os.listdir(d)):
-            m = re.fullmatch(r"[rk](\d+)\.json", name)
-            if (m and int(m.group(1)) > head) or name == "manifest.json.tmp":
-                os.remove(os.path.join(d, name))
-                removed.append(os.path.join(d, name))
+        with self._writer(db, res):
+            head = self._read_manifest(db, res)["revisions"][-1]["revision"]
+            for name in sorted(os.listdir(d)):
+                m = re.fullmatch(r"[rk](\d+)\.json", name)
+                if (m and int(m.group(1)) > head) or name == "manifest.json.tmp":
+                    os.remove(os.path.join(d, name))
+                    removed.append(os.path.join(d, name))
         return removed
 
     # ------------------------------------------------------------ store
@@ -349,19 +359,24 @@ class DocumentStore:
         previous revision's keys carry over (an empty commit preserves
         every node's identity); omitted WITH new text, the revision
         renumbers sequentially (legacy, identity-breaking — no
-        in-repo caller does this any more)."""
-        m = self._read_manifest(db, res)
-        n = m["revisions"][-1]["revision"] + 1
-        if text is None:
-            text = self.read_text(db, res, n - 1)
-            if keys is None:
-                keys = self.read_keys(db, res, n - 1)
-        self._write_revision(db, res, n, text, keys=keys)
-        if keys is not None:
-            m["next_key"] = max(m.get("next_key", 1), max(keys, default=0) + 1)
-        m["revisions"].append(self._rev_entry(n, author, author_id, message))
-        self._write_manifest(db, res, m)
-        return n
+        in-repo caller does this any more).
+
+        Holds the resource's writer lock from the head read to the
+        manifest write, so concurrent commits get distinct revisions
+        and none is overwritten."""
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            n = m["revisions"][-1]["revision"] + 1
+            if text is None:
+                text = self.read_text(db, res, n - 1)
+                if keys is None:
+                    keys = self.read_keys(db, res, n - 1)
+            self._write_revision(db, res, n, text, keys=keys)
+            if keys is not None:
+                m["next_key"] = max(m.get("next_key", 1), max(keys, default=0) + 1)
+            m["revisions"].append(self._rev_entry(n, author, author_id, message))
+            self._write_manifest(db, res, m)
+            return n
 
     # --------------------------------------------------------- indexes
     def create_index(
@@ -378,27 +393,28 @@ class DocumentStore:
         the reference answers from its index trees (the columnar
         layout IS the index — SURVEY.md §7 'Do NOT port'); the
         registry preserves find-index numbering/commit semantics."""
-        m = self._read_manifest(db, res)
-        for e in m["indexes"]:
-            if (
-                e["kind"] == kind
-                and e["content_type"] == content_type
-                and tuple(e["paths"]) == tuple(paths)
-            ):
-                return e["number"]  # catalogues once (idempotent create)
-        number = (
-            max((e["number"] for e in m["indexes"]), default=-1) + 1
-        )
-        m["indexes"].append(
-            {
-                "number": number,
-                "kind": kind,
-                "content_type": content_type,
-                "paths": list(paths),
-            }
-        )
-        self._write_manifest(db, res, m)
-        return number
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            for e in m["indexes"]:
+                if (
+                    e["kind"] == kind
+                    and e["content_type"] == content_type
+                    and tuple(e["paths"]) == tuple(paths)
+                ):
+                    return e["number"]  # catalogues once (idempotent create)
+            number = (
+                max((e["number"] for e in m["indexes"]), default=-1) + 1
+            )
+            m["indexes"].append(
+                {
+                    "number": number,
+                    "kind": kind,
+                    "content_type": content_type,
+                    "paths": list(paths),
+                }
+            )
+            self._write_manifest(db, res, m)
+            return number
 
     def drop_index(
         self,
@@ -409,16 +425,17 @@ class DocumentStore:
     ) -> int:
         """jn:drop-*-index — remove matching definitions (all of the
         kind when no number is given); returns how many dropped."""
-        m = self._read_manifest(db, res)
-        keep, dropped = [], 0
-        for e in m["indexes"]:
-            if e["kind"] == kind and (number is None or e["number"] == number):
-                dropped += 1
-            else:
-                keep.append(e)
-        m["indexes"] = keep
-        self._write_manifest(db, res, m)
-        return dropped
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            keep, dropped = [], 0
+            for e in m["indexes"]:
+                if e["kind"] == kind and (number is None or e["number"] == number):
+                    dropped += 1
+                else:
+                    keep.append(e)
+            m["indexes"] = keep
+            self._write_manifest(db, res, m)
+            return dropped
 
     def find_index(
         self,
@@ -473,12 +490,13 @@ class DocumentStore:
         Leading '$.' is normalized away (ValidTimeConfig)."""
         frm = valid_from[2:] if valid_from.startswith("$.") else valid_from
         to = valid_to[2:] if valid_to.startswith("$.") else valid_to
-        m = self._read_manifest(db, res)
-        m["valid_time"] = {"from": frm, "to": to}
-        self._write_manifest(db, res, m)
-        self.create_index(
-            db, res, "cas", "xs:dateTime", (f"//[]/{frm}", f"//[]/{to}")
-        )
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            m["valid_time"] = {"from": frm, "to": to}
+            self._write_manifest(db, res, m)
+            self.create_index(
+                db, res, "cas", "xs:dateTime", (f"//[]/{frm}", f"//[]/{to}")
+            )
 
     def valid_time_config(self, db: str, res: str) -> dict | None:
         return self._read_manifest(db, res).get("valid_time")

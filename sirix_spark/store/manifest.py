@@ -8,20 +8,26 @@ GetRevisionTimestamp.java / GetAuthorID/Name.java accessors;
 The manifest is tiny (one entry per commit) and driver-side; writes
 are atomic via tmp+rename. Single-writer semantics, like the
 reference's one-write-transaction-per-resource model
-(JsonNodeTrx.java).
+(JsonNodeTrx.java), enforced by `writer_lock`: a commit holds it from
+its head read to its manifest append.
 
 Schemas live in the catalog, as in Delta's and Iceberg's table
 metadata: each entry records the Spark schema of every part its commit
-wrote (`data/`, `upserts/`, `deletes/`), so opening a revision reads
-its parquet with a known schema instead of launching one
-schema-inference Spark job per part. Entries written before schemas
-were recorded carry none; readers infer theirs.
+wrote (`data/`, `upserts/`, `deletes/`, `cum/`), so opening a revision
+reads its parquet with a known schema instead of launching one
+schema-inference Spark job per part. The schema is the writing plan's,
+made nullable, which is exactly what a parquet write stores, so
+recording it costs no job either. Entries written before schemas were
+recorded carry none; readers infer theirs.
 """
 
 from __future__ import annotations
 
+import fcntl
 import json
 import os
+import threading
+from contextlib import contextmanager
 from dataclasses import asdict, dataclass
 from datetime import datetime, timezone
 
@@ -37,7 +43,7 @@ class RevisionEntry:
     kind: str  # "checkpoint" | "delta"
     n_upserts: int = 0
     n_deletes: int = 0
-    # part name ("data" | "upserts" | "deletes") → StructType JSON
+    # part name ("data" | "upserts" | "deletes" | "cum") → StructType JSON
     schemas: dict[str, str] | None = None
 
     def schema(self, part: str) -> StructType | None:
@@ -50,6 +56,34 @@ class RevisionEntry:
     def committed_at_dt(self) -> datetime:
         dt = datetime.fromisoformat(self.committed_at)
         return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
+
+
+_held = threading.local()
+
+
+@contextmanager
+def writer_lock(res_dir: str):
+    """Exclusive writer lock on one resource: an `flock` on the
+    resource directory itself, so no lock file appears in its listing.
+    Each holder opens its own descriptor, so the lock excludes threads
+    of one process and other processes alike, and the kernel releases
+    it when a holder dies. Re-entrant per thread: a read-modify-write
+    commit (delete_where → _write_commit) takes it once."""
+    held = _held.__dict__.setdefault("dirs", set())
+    key = os.path.realpath(res_dir)
+    if key in held:
+        yield
+        return
+    fd = os.open(key, os.O_RDONLY)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        held.add(key)
+        try:
+            yield
+        finally:
+            held.discard(key)
+    finally:
+        os.close(fd)  # closing the descriptor releases the lock
 
 
 class Manifest:

@@ -19,27 +19,46 @@ Reference parity map (SURVEY.md §2.1, §2.7, §2.12):
                                 → valid_at() / open_bitemporal()
 
 Physical design (scale-first):
-- Each commit writes ONLY its delta (upserts parquet + deleted-keys
+- Each commit writes its delta (upserts parquet + deleted-keys
   parquet); every `checkpoint_every` commits a full checkpoint is
-  materialized. doc(r) = checkpoint ≤ r + deltas (ckpt, r],
-  latest-revision-wins per record_key — one shuffle, bounded by the
-  checkpoint interval regardless of history length. This is the
-  merge-on-read pattern (Iceberg/Delta-style) standing in for the
-  reference's sliding-snapshot page versioning
-  (docs/ARCHITECTURE.md:1560).
+  materialized. A delta commit also writes `cum/`: the latest-wins
+  merge of every change since its checkpoint, tombstones included,
+  built from the previous revision's `cum/` plus this commit's delta
+  in one task (no shuffle). doc(r) is then
+  checkpoint ⋉̸ cum ∪ cum.live — the checkpoint left-anti-joined
+  against the part's keys, plus its live rows — at any depth: three
+  parquet scans, no window, and the checkpoint is never shuffled (the
+  planner broadcasts a small cum/ by its size estimate). This is the
+  Spark analog of the reference's sliding snapshot, which versions
+  pages as deltas against the last full dump
+  (docs/ARCHITECTURE.md:1560), and of Iceberg/Delta merge-on-read.
+- The per-revision upserts/ and deletes/ stay next to cum/:
+  change_view, versions_view and history_view read exactly one
+  revision's changes from them. A cum/ holds at most
+  `checkpoint_every` × commit size rows (fewer when commits touch the
+  same keys), and a checkpoint starts a new chain, so the space it
+  adds is bounded by the checkpoint interval, not by history length.
+- Revisions committed before cum/ existed, and the deltas that follow
+  one in its cycle, keep the older merge: the checkpoint unioned with
+  every delta since it, latest revision wins per record_key.
 - Snapshots are plain parquet: columnar, stats-pruned — the
   "projection index is the storage itself" property (SURVEY.md §1.3).
 - Schemas live in the revision catalog (manifest.py), as in Delta's
   and Iceberg's table metadata: a commit records the Spark schema of
-  each part it wrote, read back from the written files, and doc() /
-  change_view() read every part with it. A bare parquet read would
-  launch a schema-inference Spark job per part — one per merged delta
-  — before the query runs; with recorded schemas building doc(r)
-  launches none, at any depth. Revisions committed before schemas
-  were recorded are read with inference.
+  each part it wrote — its plan's schema made nullable, which is what
+  a parquet write stores — and doc() / change_view() read every part
+  with it. A bare parquet read would launch a schema-inference Spark
+  job per part — one per merged delta — before the query runs; with
+  recorded schemas building doc(r) launches none, at any depth.
+  Revisions committed before schemas were recorded are read with
+  inference.
 - Record identity: a caller-designated key column is renamed to
   `record_key` (the stable 64-bit nodeKey analog,
   docs/ARCHITECTURE.md:70-100).
+- One writer per resource (the reference's one write transaction per
+  resource, JsonNodeTrx): every commit holds manifest.writer_lock from
+  its orphan GC and head read to its manifest append; read-modify-write
+  commits (delete_where, rename_field, ...) hold it from their read.
 """
 
 from __future__ import annotations
@@ -50,12 +69,28 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from sirix_spark.store.manifest import Manifest, RevisionEntry
+from sirix_spark.store.manifest import Manifest, RevisionEntry, writer_lock
 
 RECORD_KEY = "record_key"
 REVISION_COL = "_revision"
 DELETED_COL = "_deleted"
+
+
+def _nullable(t: DataType) -> DataType:
+    """`t` with every field, array element and map value nullable:
+    the schema a parquet write stores for a plan of schema `t`
+    (Spark's DataType.asNullable)."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 class VersionedStore:
@@ -88,6 +123,12 @@ class VersionedStore:
     def _manifest(self, db: str, res: str) -> Manifest:
         return Manifest(os.path.join(self._res_path(db, res), "manifest.json"))
 
+    def _writer(self, db: str, res: str):
+        """The resource's writer lock (manifest.writer_lock)."""
+        if not self.exists_resource(db, res):
+            raise ValueError(f"resource {db}/{res} does not exist; call store() first")
+        return writer_lock(self._res_path(db, res))
+
     def recover(self, db: str, res: str) -> list[str]:
         """Crash recovery (reference: PowerLossSimulationTest /
         CrashRecoveryInjectionTest semantics): the manifest's atomic
@@ -97,13 +138,18 @@ class VersionedStore:
         landed, a stranded manifest.json.tmp — is an orphan of the
         interrupted commit. GC them (a retried commit would otherwise
         trip its errorifexists parquet write) and return the removed
-        paths."""
+        paths. Runs under the writer lock, so a commit in flight is
+        never taken for an orphan."""
+        if not self.exists_resource(db, res):
+            return []
+        with self._writer(db, res):
+            return self._recover(db, res)
+
+    def _recover(self, db: str, res: str) -> list[str]:
         import shutil
 
         removed: list[str] = []
         res_path = self._res_path(db, res)
-        if not self.exists_resource(db, res):
-            return removed
         head = self._manifest(db, res).latest_revision()
         for name in sorted(os.listdir(res_path)):
             full = os.path.join(res_path, name)
@@ -184,15 +230,17 @@ class VersionedStore:
     def _write_part(
         self, rev_path: str, part: str, df: DataFrame, schemas: dict[str, str]
     ) -> DataFrame:
-        """Write one part (data/, upserts/ or deletes/) of a commit and
-        read it back. The read-back gives footer-metadata counts
-        without re-running the plan that produced `df`, and the schema
-        the manifest records for the part (`schemas[part]`)."""
+        """Write one part (data/, upserts/, deletes/ or cum/) of a
+        commit and read it back. The read-back gives footer-metadata
+        counts without re-running the plan that produced `df`. Its
+        schema is the plan's made nullable — the schema the parquet
+        write stores — so the manifest records it (`schemas[part]`)
+        and the read-back needs no schema-inference job."""
         path = os.path.join(rev_path, part)
         df.write.mode("errorifexists").parquet(path)
-        written = self.spark.read.parquet(path)
-        schemas[part] = written.schema.json()
-        return written
+        schema = _nullable(df.schema)
+        schemas[part] = schema.json()
+        return self.spark.read.schema(schema).parquet(path)
 
     def _read_part(self, db: str, res: str, entry: RevisionEntry, part: str) -> DataFrame:
         """Read one part of a committed revision with the schema its
@@ -218,7 +266,14 @@ class VersionedStore:
             ]
         )
 
-    def _write_commit(
+    def _write_commit(self, db: str, res: str, *args, **kw) -> int:
+        """Append one revision under the resource's writer lock, so its
+        orphan GC, head read, part writes and manifest append see no
+        other writer."""
+        with self._writer(db, res):
+            return self._commit(db, res, *args, **kw)
+
+    def _commit(
         self,
         db: str,
         res: str,
@@ -230,11 +285,9 @@ class VersionedStore:
         force_checkpoint: bool = False,
         full_state: bool = False,
     ) -> int:
-        self.recover(db, res)  # GC orphans of any interrupted commit
+        self._recover(db, res)  # GC orphans of any interrupted commit
         manifest = self._manifest(db, res)
         rev = manifest.latest_revision() + 1
-        if rev == 1:
-            raise ValueError(f"resource {db}/{res} does not exist; call store() first")
         checkpoint = force_checkpoint or (rev % self.checkpoint_every == 0)
         path = self._rev_dir(db, res, rev)
         n_up = n_del = 0
@@ -281,6 +334,14 @@ class VersionedStore:
                         upserts.select(RECORD_KEY), RECORD_KEY, "left_anti"
                     ).unionByName(upserts, allowMissingColumns=True)
                 self._write_part(path, "data", state, schemas)
+            else:
+                changes = []
+                if n_up:
+                    changes.append(self._tag(upserts, rev, False))
+                if n_del:
+                    # key-only tombstones: the union pads the payload
+                    changes.append(self._tag(delete_keys, rev, True))
+                self._write_cum(db, res, manifest.entry(rev - 1), path, changes, schemas)
             kind = "checkpoint" if checkpoint else "delta"
         manifest.append(
             RevisionEntry(
@@ -295,6 +356,44 @@ class VersionedStore:
             )
         )
         return rev
+
+    def _write_cum(
+        self,
+        db: str,
+        res: str,
+        prev: RevisionEntry,
+        path: str,
+        changes: list[DataFrame],
+        schemas: dict[str, str],
+    ) -> None:
+        """Write a delta commit's cum/: the latest-wins merge of every
+        change since the checkpoint, tombstones included — the previous
+        revision's cum/ plus `changes` (this commit's tagged parts,
+        empty ones left out as doc()'s union merge leaves them out).
+        A delta after a checkpoint starts a new chain. A delta after a
+        delta without cum/ (committed before cum/ existed) writes none,
+        and its cycle keeps the union merge.
+
+        coalesce(1) satisfies the window's distribution, so there is no
+        exchange: one task reads the previous part and this delta and
+        writes one file."""
+        if prev.kind == "delta":
+            if prev.schema("cum") is None:
+                return
+            changes = [self._read_part(db, res, prev, "cum"), *changes]
+        if not changes:
+            return
+        merged = changes[0]
+        for p in changes[1:]:
+            merged = merged.unionByName(p, allowMissingColumns=True)
+        w = Window.partitionBy(RECORD_KEY).orderBy(F.col(REVISION_COL).desc())
+        latest = (
+            merged.coalesce(1)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        self._write_part(path, "cum", latest, schemas)
 
     # ----- update operators (JSONiq update syntax, §2.12) ------------
     def insert_records(self, db: str, res: str, records: DataFrame, key: str, **kw) -> int:
@@ -316,41 +415,43 @@ class VersionedStore:
         Keys may be dotted paths into nested structs
         ('address.city') — the sub-record surgical update the
         reference does at node level, done here with withField."""
-        cur = self.doc(db, res)
-        touched = cur.filter(cond)
-        for col, value in updates.items():
-            v = value if hasattr(value, "_jc") else F.lit(value)
-            if "." in col:
-                root, rest = col.split(".", 1)
-                touched = touched.withColumn(
-                    root, F.col(root).withField(rest, v)
-                )
-            else:
-                touched = touched.withColumn(col, v)
-        return self._write_commit(db, res, touched, None, **kw)
+        with self._writer(db, res):
+            touched = self.doc(db, res).filter(cond)
+            for col, value in updates.items():
+                v = value if hasattr(value, "_jc") else F.lit(value)
+                if "." in col:
+                    root, rest = col.split(".", 1)
+                    touched = touched.withColumn(
+                        root, F.col(root).withField(rest, v)
+                    )
+                else:
+                    touched = touched.withColumn(col, v)
+            return self._write_commit(db, res, touched, None, **kw)
 
     def revert_to(self, db: str, res: str, revision: int, **kw) -> int:
         """sdb:rollback analog for committed history: append a new
         revision whose content is a past revision's (history stays
         append-only and fully queryable — the reference never
         destroys revisions either)."""
-        past_state = self.doc(db, res, revision=revision)
         kw.setdefault("message", f"revert to r{revision}")
-        return self._write_commit(db, res, past_state, None, full_state=True, **kw)
+        with self._writer(db, res):
+            past_state = self.doc(db, res, revision=revision)
+            return self._write_commit(db, res, past_state, None, full_state=True, **kw)
 
     def delete_where(self, db: str, res: str, cond, **kw) -> int:
         """delete json (JsonNodeTrx.java:117 remove()): tombstone by
         key — deleted records are absent from later revisions but
         remain in earlier ones."""
-        cur = self.doc(db, res)
-        keys = cur.filter(cond).select(RECORD_KEY)
-        return self._write_commit(db, res, None, keys, **kw)
+        with self._writer(db, res):
+            keys = self.doc(db, res).filter(cond).select(RECORD_KEY)
+            return self._write_commit(db, res, None, keys, **kw)
 
     def rename_field(self, db: str, res: str, old: str, new: str, **kw) -> int:
         """rename json (JsonNodeTrx.java:109 setObjectKeyName).
         Schema change → forced checkpoint commit."""
-        cur = self.doc(db, res).withColumnRenamed(old, new)
-        return self._write_commit(db, res, cur, None, full_state=True, **kw)
+        with self._writer(db, res):
+            cur = self.doc(db, res).withColumnRenamed(old, new)
+            return self._write_commit(db, res, cur, None, full_state=True, **kw)
 
     # ----- reads ------------------------------------------------------
     def doc(
@@ -363,9 +464,16 @@ class VersionedStore:
         """Open the resource at a revision / point in time
         (jn:doc Doc.java, jn:open DocByPointInTime.java).
 
-        Merge-on-read: base checkpoint + deltas, latest wins per key.
-        Cost is bounded by checkpoint_every, independent of total
-        history length."""
+        Merge-on-read against the latest checkpoint ≤ r. A delta
+        revision with a cum/ part is checkpoint ⋉̸ cum ∪ cum.live: the
+        checkpoint's rows whose key the part does not hold, plus the
+        part's live rows — the same plan at every depth, and the
+        checkpoint is not shuffled. Columns come out as in the union
+        merge: the checkpoint's first, then new ones in order of first
+        appearance. A delta without cum/ (committed before it existed)
+        unions the checkpoint with every delta since it, latest
+        revision wins per key. Either way the cost is independent of
+        total history length."""
         manifest = self._manifest(db, res)
         if timestamp is not None:
             if revision is not None:
@@ -374,11 +482,17 @@ class VersionedStore:
         revision = revision or manifest.latest_revision()
         if revision < 1:
             raise KeyError(f"resource {db}/{res} has no revisions")
-        manifest.entry(revision)  # bounds check
+        entry = manifest.entry(revision)  # bounds check
         ckpt = manifest.latest_checkpoint_at_or_before(revision)
         base = self._read_part(db, res, manifest.entry(ckpt), "data")
         if ckpt == revision:
             return base
+        if entry.schema("cum") is not None:
+            cum = self._read_part(db, res, entry, "cum")
+            live = cum.filter(~F.col(DELETED_COL)).drop(REVISION_COL, DELETED_COL)
+            return base.join(cum.select(RECORD_KEY), RECORD_KEY, "left_anti").unionByName(
+                live, allowMissingColumns=True
+            )
         parts = [self._tag(base, ckpt, False)]
         for r in range(ckpt + 1, revision + 1):
             e = manifest.entry(r)
@@ -480,9 +594,10 @@ class VersionedStore:
         """Force a checkpoint commit (no logical change): bounds
         future merge-on-read cost — the analog of the reference's
         projection re-encode (docs/COMPARISON_DUCKDB.md:105-110)."""
-        cur = self.doc(db, res)
         kw.setdefault("message", "compact")
-        return self._write_commit(db, res, cur, None, full_state=True, **kw)
+        with self._writer(db, res):
+            cur = self.doc(db, res)
+            return self._write_commit(db, res, cur, None, full_state=True, **kw)
 
     def versions_view(self, db: str, res: str, max_revision: int | None = None) -> DataFrame:
         """Sparse temporal substrate: one row per record VERSION with
@@ -529,12 +644,35 @@ class VersionedStore:
         return out
 
     # ----- diff (jn:diff, BasicJsonDiff.java:21) ---------------------
+    def _changed_keys(self, db: str, res: str, r1: int, r2: int) -> DataFrame | None:
+        """Keys that can differ between r1 and r2, or None if unknown.
+        When both share a checkpoint and the later one has cum/, a key
+        absent from that part is unchanged from the checkpoint through
+        both revisions."""
+        manifest = self._manifest(db, res)
+        later = manifest.entry(max(r1, r2))
+        ckpt = manifest.latest_checkpoint_at_or_before
+        if ckpt(r1) != ckpt(r2) or later.schema("cum") is None:
+            return None
+        return self._read_part(db, res, later, "cum").select(RECORD_KEY)
+
+    def _diff_sides(self, db: str, res: str, r1: int, r2: int) -> tuple[DataFrame, DataFrame]:
+        """doc(r1) and doc(r2), narrowed to the keys that can differ
+        between them when those are known, so the diff serializes
+        only the changed records."""
+        d1 = self.doc(db, res, revision=r1)
+        d2 = self.doc(db, res, revision=r2)
+        keys = self._changed_keys(db, res, r1, r2)
+        if keys is not None:
+            d1 = d1.join(keys, RECORD_KEY, "left_semi")
+            d2 = d2.join(keys, RECORD_KEY, "left_semi")
+        return d1, d2
+
     def diff(self, db: str, res: str, r1: int, r2: int) -> DataFrame:
         """Record-level semantic diff between two revisions → ops
         DataFrame (insert/delete/update with old/new JSON payloads —
         the JSON-patch shape of JsonDiffSerializer.java)."""
-        d1 = self.doc(db, res, revision=r1)
-        d2 = self.doc(db, res, revision=r2)
+        d1, d2 = self._diff_sides(db, res, r1, r2)
         payload = [c for c in d1.columns if c != RECORD_KEY]
         o = d1.select(
             F.col(RECORD_KEY),
@@ -566,8 +704,7 @@ class VersionedStore:
         and flattened JVM-side; one shuffle on (record key, path)."""
         from sirix_spark.operators.diff import json_node_diff
 
-        d1 = self.doc(db, res, revision=r1)
-        d2 = self.doc(db, res, revision=r2)
+        d1, d2 = self._diff_sides(db, res, r1, r2)
         payload = sorted(set(d1.columns) | set(d2.columns) - {RECORD_KEY})
         payload = [c for c in payload if c != RECORD_KEY]
 

@@ -16,6 +16,8 @@ import os
 import re
 from datetime import datetime, timezone
 
+from sirix_spark.store.manifest import writer_lock
+
 
 class XmlStoreError(ValueError):
     pass
@@ -47,21 +49,30 @@ class XmlStore:
             json.dump(m, f, indent=1)
         os.replace(p + ".tmp", p)
 
+    def _writer(self, db: str, res: str):
+        """The resource's writer lock (manifest.writer_lock)."""
+        if not self.exists(db, res):
+            raise XmlStoreError(f"unknown XML resource {db}/{res}")
+        return writer_lock(self._res_dir(db, res))
+
     def recover(self, db: str, res: str) -> list[str]:
         """GC files orphaned by a commit killed before its manifest
         rename: r{n}.xml / k{n}.json beyond the manifest head, and a
         stranded manifest.json.tmp. The manifest always names a
-        fully-committed prefix, so everything past it is garbage."""
+        fully-committed prefix, so everything past it is garbage. Runs
+        under the writer lock, so a commit in flight is never taken for
+        an orphan."""
         removed: list[str] = []
         d = self._res_dir(db, res)
         if not self.exists(db, res):
             return removed
-        head = self._read_manifest(db, res)["revisions"][-1]["revision"]
-        for name in sorted(os.listdir(d)):
-            m = re.fullmatch(r"[rk](\d+)\.(?:xml|json)", name)
-            if (m and int(m.group(1)) > head) or name == "manifest.json.tmp":
-                os.remove(os.path.join(d, name))
-                removed.append(os.path.join(d, name))
+        with self._writer(db, res):
+            head = self._read_manifest(db, res)["revisions"][-1]["revision"]
+            for name in sorted(os.listdir(d)):
+                m = re.fullmatch(r"[rk](\d+)\.(?:xml|json)", name)
+                if (m and int(m.group(1)) > head) or name == "manifest.json.tmp":
+                    os.remove(os.path.join(d, name))
+                    removed.append(os.path.join(d, name))
         return removed
 
     def exists(self, db: str, res: str) -> bool:
@@ -85,17 +96,21 @@ class XmlStore:
         return 1
 
     def commit(self, db: str, res: str, xml: str, keys: list[int] | None = None) -> int:
-        m = self._read_manifest(db, res)
-        n = m["revisions"][-1]["revision"] + 1
-        self._write_text(db, res, n, xml)
-        if keys is not None:
-            self._write_keys(db, res, n, keys)
-            m["next_key"] = max(
-                m.get("next_key", 1), max(keys, default=0) + 1
-            )
-        m["revisions"].append(self._entry(n))
-        self._write_manifest(db, res, m)
-        return n
+        """Append a revision. Holds the resource's writer lock from the
+        head read to the manifest write, so concurrent commits get
+        distinct revisions and none is overwritten."""
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            n = m["revisions"][-1]["revision"] + 1
+            self._write_text(db, res, n, xml)
+            if keys is not None:
+                self._write_keys(db, res, n, keys)
+                m["next_key"] = max(
+                    m.get("next_key", 1), max(keys, default=0) + 1
+                )
+            m["revisions"].append(self._entry(n))
+            self._write_manifest(db, res, m)
+            return n
 
     # ------------------------------------------- node-identity sidecars
     # Same discipline as the JSON DocumentStore: one keys file per
@@ -194,26 +209,27 @@ class XmlStore:
         content_type: str | None,
         paths: tuple[str, ...],
     ) -> int:
-        m = self._read_manifest(db, res)
-        idxs = m.setdefault("indexes", [])
-        for e in idxs:
-            if (
-                e["kind"] == kind
-                and e["content_type"] == content_type
-                and tuple(e["paths"]) == tuple(paths)
-            ):
-                return e["number"]
-        number = max((e["number"] for e in idxs), default=-1) + 1
-        idxs.append(
-            {
-                "number": number,
-                "kind": kind,
-                "content_type": content_type,
-                "paths": list(paths),
-            }
-        )
-        self._write_manifest(db, res, m)
-        return number
+        with self._writer(db, res):
+            m = self._read_manifest(db, res)
+            idxs = m.setdefault("indexes", [])
+            for e in idxs:
+                if (
+                    e["kind"] == kind
+                    and e["content_type"] == content_type
+                    and tuple(e["paths"]) == tuple(paths)
+                ):
+                    return e["number"]
+            number = max((e["number"] for e in idxs), default=-1) + 1
+            idxs.append(
+                {
+                    "number": number,
+                    "kind": kind,
+                    "content_type": content_type,
+                    "paths": list(paths),
+                }
+            )
+            self._write_manifest(db, res, m)
+            return number
 
     def index_def(self, db: str, res: str, number: int) -> dict:
         for e in self._read_manifest(db, res).get("indexes", []):

@@ -270,3 +270,41 @@ def test_store_node_diff_wire_shape(spark, tmp_path):
     assert wire["diffs"] == [
         {"type": "update", "recordKey": 2, "path": "/amount", "old": "250", "new": "300"}
     ]
+
+
+def test_store_diff_narrowed_to_changed_keys(spark, tmp_path):
+    """Two revisions of one checkpoint cycle differ only in keys the
+    later one's cum/ part holds, so diff and node_diff read only those
+    records; the output is identical to the un-narrowed plan's for
+    forward, backward and cross-checkpoint pairs (the last are not
+    narrowed)."""
+    from sirix_spark.store import VersionedStore
+
+    root = str(tmp_path / "narrow")
+    store = VersionedStore(spark, root, checkpoint_every=5)
+    db, res = "db", "r"
+    schema = "id long, name string, tags array<string>, addr struct<city:string,zip:long>"
+    store.store(
+        db, res,
+        spark.createDataFrame(
+            [(i, f"n{i}", [f"t{i}"], (f"c{i}", i)) for i in range(30)], schema
+        ),
+        key="id",
+    )
+    for r in range(2, 9):  # r5 is a cadence checkpoint
+        if r == 4:
+            store.delete_where(db, res, F.col("record_key").isin(3, 21))
+            continue
+        rows = [(r, f"u{r}", [f"t{r}", "x"], (f"c{r}", r + 1)), (100 + r, "new", None, None)]
+        store.upsert_records(db, res, spark.createDataFrame(rows, schema), key="id")
+    plain = VersionedStore(spark, root, checkpoint_every=5)
+    plain._changed_keys = lambda *a: None
+    # forward from a checkpoint, forward across a delete, backward,
+    # and across a checkpoint both ways
+    pairs = {(1, 3): True, (2, 4): True, (8, 6): True, (3, 7): False, (8, 2): False}
+    for (r1, r2), narrowed in pairs.items():
+        assert (store._changed_keys(db, res, r1, r2) is not None) == narrowed, (r1, r2)
+        for mode in ("node", "record"):
+            got = store.diff_json(db, res, r1, r2, mode)
+            assert got == plain.diff_json(db, res, r1, r2, mode), (r1, r2, mode)
+            assert json.loads(got)["diffs"], (r1, r2, mode)
