@@ -573,15 +573,7 @@ class DocEvaluator:
                 )
                 key = (h.db, h.res, r["__r"] or h.revision)
                 if key not in ts_cache:
-                    m = self.store._read_manifest(h.db, h.res)
-                    ts_cache[key] = next(
-                        (
-                            e["committed_at"]
-                            for e in m["revisions"]
-                            if e["revision"] == key[2]
-                        ),
-                        "",
-                    )
+                    ts_cache[key] = self.store.rev_entry(*key).committed_at
                 parts.append(
                     '{"revisionNumber":%d,"revisionTimestamp":%s,"revision":%s}'
                     % (key[2], json.dumps(ts_cache[key]), body)
@@ -2461,8 +2453,6 @@ class DocEvaluator:
             # the latest revision committed at-or-before the instant;
             # EMPTY before the first revision (the resource did not
             # exist yet — the reference's anachronism regression)
-            from datetime import datetime as _dt
-
             args = []
             for a in node.args:
                 if isinstance(a, P.Lit):
@@ -2479,12 +2469,7 @@ class DocEvaluator:
                     "jn:open needs (db, res, xs:dateTime literal)"
                 )
             db, res, ts_str = args
-            ts = _dt.fromisoformat(str(ts_str).replace("Z", "+00:00"))
-            chosen = None
-            for e in self.store._read_manifest(db, res)["revisions"]:
-                committed = _dt.fromisoformat(e["committed_at"])
-                if committed <= ts:
-                    chosen = e["revision"]
+            chosen = self.store.open_at(db, res, str(ts_str))
             if chosen is None:
                 df = (
                     stream.withColumn("__k", F.lit(None).cast("bigint"))
@@ -2533,9 +2518,9 @@ class DocEvaluator:
             h0 = self.handles.get(base.handles[0])
             e = self.store.rev_entry(h0.db, h0.res, h0.revision)
             val = {
-                "sdb:author-name": e.get("author", "admin"),
-                "sdb:author-id": e.get("author_id", ""),
-                "sdb:timestamp": e.get("committed_at", ""),
+                "sdb:author-name": e.author or "admin",
+                "sdb:author-id": e.author_id or "",
+                "sdb:timestamp": e.committed_at,
             }[name]
             df = (
                 base.df.drop(*ITEM_COLS)
@@ -2919,7 +2904,7 @@ class DocEvaluator:
             bdf.select(F.col("__xid").alias("doc"), F.col("__j").alias("xml"))
         )
         if name == "xml:scan-name-index":
-            names = tuple(idx["paths"])
+            names = idx.paths
             cond = F.col("kind") == "ELEMENT"
             if names:
                 cond = cond & F.col("name").isin(*names)
@@ -2931,7 +2916,7 @@ class DocEvaluator:
             pf = _paths_arg(
                 self, node.args[2] if len(node.args) > 2 else None, scope
             )
-            patterns = pf or tuple(idx["paths"])
+            patterns = pf or idx.paths
             cond = None
             for p in patterns:
                 c = F.col("path").rlike(path_pattern_regex(p))
@@ -2950,7 +2935,7 @@ class DocEvaluator:
                 node.args[pf_pos] if len(node.args) > pf_pos else None,
                 scope,
             )
-            patterns = pf or tuple(idx["paths"])
+            patterns = pf or idx.paths
             pc = None
             for p in patterns:
                 c = F.col("path").rlike(path_pattern_regex(p))
@@ -2960,7 +2945,7 @@ class DocEvaluator:
             cond = F.col("kind").isin("TEXT", "ATTRIBUTE") & (
                 pc if pc is not None else F.lit(True)
             )
-            numeric = idx["content_type"] in (
+            numeric = idx.content_type in (
                 "xs:integer", "xs:decimal", "xs:double", "xs:float",
             )
             if is_range:
@@ -3018,8 +3003,6 @@ class DocEvaluator:
         xml:open-revisions(db,res,$t1,$t2) over the XmlStore sidecar.
         Items carry the revision's serialized XML as their text and
         the revision number as identity (so sdb:revision composes)."""
-        from datetime import datetime as _dt
-
         from sirix_spark.store.xmlstore import XmlStore
 
         xs = XmlStore(self.store.root)
@@ -3031,13 +3014,7 @@ class DocEvaluator:
                 and a.args
                 and isinstance(a.args[0], P.Lit)
             ):
-                s = str(a.args[0].value).replace("Z", "+00:00")
-                d = _dt.fromisoformat(s)
-                if d.tzinfo is None:
-                    from datetime import timezone as _tz
-
-                    d = d.replace(tzinfo=_tz.utc)
-                return d
+                return str(a.args[0].value)
             raise JsoniqCompileError(f"{node.name} needs xs:dateTime literals")
 
         lits = [a.value for a in node.args[:2] if isinstance(a, P.Lit)]
@@ -3112,7 +3089,6 @@ class DocEvaluator:
         time like jn:open. The filter is a Spark plan over the node
         table — the parquet/columnar layout serves as the reference's
         valid-time CAS index."""
-        from datetime import datetime as _dt
 
         def _dt_arg(a):
             if (
@@ -3131,13 +3107,8 @@ class DocEvaluator:
             raise JsoniqCompileError(f"{node.name} needs (db, res, …)")
         db, res = lits
         if node.name == "jn:open-bitemporal":
-            tx_str = _dt_arg(node.args[2])
+            chosen = self.store.open_at(db, res, _dt_arg(node.args[2]))
             valid_str = _dt_arg(node.args[3])
-            tx = _dt.fromisoformat(tx_str.replace("Z", "+00:00"))
-            chosen = None
-            for e in self.store._read_manifest(db, res)["revisions"]:
-                if _dt.fromisoformat(e["committed_at"]) <= tx:
-                    chosen = e["revision"]
         else:
             valid_str = _dt_arg(node.args[2])
             chosen = self.store.latest_revision(db, res)
@@ -5455,8 +5426,8 @@ class DocEvaluator:
             mapping = {}
             for hid in self._var_handles(inner, scope):
                 h = self.handles.get(hid)
-                for e in self.store._read_manifest(h.db, h.res)["revisions"]:
-                    mapping[e["revision"]] = _iso_epoch(e["committed_at"])
+                for e in self.store.entries(h.db, h.res):
+                    mapping[e.revision] = e.committed_at_dt.timestamp()
             expr = F.lit(None).cast("double")
             for rev, secs in mapping.items():
                 expr = F.when(rcol == F.lit(rev), F.lit(secs)).otherwise(expr)

@@ -418,18 +418,12 @@ class _PyInterp:
                         path = path[1:]
                 with open(path) as f:
                     src = f.read()
-            import shutil
-
             from sirix_spark.sources.xml_source import _shred_one
-
-            xs = XmlStore(self.ev.store.root)
-            if xs.exists(db, res):
-                # jn:store createNew semantics: drop and recreate
-                shutil.rmtree(xs._res_dir(db, res))
-            t = tree_from_rows(_shred_one("f", str(src)), None)
             from sirix_spark.store.xmlwtx import serialize_tree
 
-            xs.store(db, res, serialize_tree(t), keys=tree_keys(t))
+            t = tree_from_rows(_shred_one("f", str(src)), None)
+            # store() replaces an existing resource (createNew semantics)
+            XmlStore(self.ev.store.root).store(db, res, serialize_tree(t), keys=tree_keys(t))
             return []
         if name == "xml:import":
             # io/Import.java: diff-import an externally-edited

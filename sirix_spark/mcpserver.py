@@ -335,15 +335,15 @@ def _guarded_store(store, access: AccessControl):
     """GuardedJsonDBStore.java analog: the query tool hands the whole
     DocumentStore to the JSONiq evaluator, so access control must hold
     INSIDE query evaluation too (jn:doc over a denied database). One
-    choke point guards every read (_read_manifest — every lookup goes
-    through the manifest) and the write entry points enforce
-    read-only."""
+    choke point guards every read (_res_dir — the revision catalog,
+    each revision's text and its keys are all found through it) and
+    the write entry points enforce read-only."""
     from sirix_spark.store.docstore import DocumentStore
 
     class GuardedDocumentStore(DocumentStore):
-        def _read_manifest(self, db, res):
+        def _res_dir(self, db, res):
             access.check_access(db, res)
-            return DocumentStore._read_manifest(self, db, res)
+            return DocumentStore._res_dir(self, db, res)
 
         def store(self, db, res, *a, **kw):
             access.check_write_access()
@@ -447,16 +447,13 @@ class ToolHandlers:
             self.access.check_access(database, resource)
             _validate_db_name(database)
             _validate_res_name(resource)
-            revisions = self.store.revisions(database, resource)
-            latest = revisions[-1]
-            first = self.store.rev_entry(database, resource, revisions[0])
-            last = self.store.rev_entry(database, resource, latest)
+            entries = self.store.entries(database, resource)
             info = {
                 "database": database,
                 "resource": resource,
-                "latestRevision": latest,
-                "created": first["committed_at"],
-                "lastModified": last["committed_at"],
+                "latestRevision": entries[-1].revision,
+                "created": entries[0].committed_at,
+                "lastModified": entries[-1].committed_at,
             }
             return ToolResult(json.dumps(info))
 
@@ -494,17 +491,12 @@ class ToolHandlers:
             self.access.check_access(database, resource)
             _validate_res_name(resource)
             limit = _opt_int(args, "count") or self.DEFAULT_HISTORY_COUNT
-            revisions = self.store.revisions(database, resource)
             entries = []
-            for rev in reversed(revisions[-limit:]):  # newest first
-                e = self.store.rev_entry(database, resource, rev)
-                entry = {
-                    "revision": e["revision"],
-                    "timestamp": e["committed_at"],
-                }
-                if e.get("message") is not None:
-                    entry["message"] = e["message"]
-                entry["user"] = e["author"]
+            for e in reversed(self.store.entries(database, resource)[-limit:]):  # newest first
+                entry = {"revision": e.revision, "timestamp": e.committed_at}
+                if e.message is not None:
+                    entry["message"] = e.message
+                entry["user"] = e.author
                 entries.append(entry)
             return ToolResult(json.dumps(entries))
 

@@ -277,10 +277,8 @@ _FANOUT_CAP = 200_000  # sanity bound on partition count at any scale
 def _posting_fanout(words, postings: int | None):
     """Explicitly sized shuffle feeding the B²-expanding posting
     groupBy (see note above). postings=None or a sub-2-task estimate
-    leaves AQE in charge. Toggle is for interleaved A/B."""
-    import os
-
-    if postings is None or os.environ.get("SIRIX_OPT_PAIR_FANOUT", "1") == "0":
+    leaves AQE in charge."""
+    if postings is None:
         return words
     cores = words.sparkSession.sparkContext.defaultParallelism
     width = min(

@@ -27,8 +27,6 @@ docnodes.shred_value):
 
 from __future__ import annotations
 
-import json
-
 from sirix_spark.store.docnodes import _kind_of, dumps_doc, loads_doc
 from sirix_spark.store.docstore import DocStoreError, DocumentStore
 
@@ -125,14 +123,8 @@ class DocWtx:
         self.author_id = author_id
         if store.exists(db, res):
             rev = store.latest_revision(db, res)
-            text = store.read_text(db, res, rev)
-            keys = store.read_keys(db, res, rev)
-            value = loads_doc(text)
-            if keys is None:
-                from sirix_spark.store.docnodes import enum_count
-
-                keys = list(range(1, enum_count(value) + 1))
-            self.root: dict | None = tree_from(value, iter(keys))
+            value = loads_doc(store.read_text(db, res, rev))
+            self.root: dict | None = tree_from(value, iter(store.node_keys(db, res, rev)))
             self._next = store.next_key(db, res)
         else:
             self.root = None
@@ -287,23 +279,8 @@ class DocWtx:
     def commit(self, message: str | None = None) -> int:
         if self.root is None:
             raise DocStoreError("nothing to commit")
-        text = dumps_doc(tree_value(self.root))
-        keys = tree_keys(self.root)
-        if not self.store.exists(self.db, self.res):
-            rev = self.store.store(
-                self.db, self.res, text, self.author, self.author_id,
-                message=message,
-            )
-            # store() numbered sequentially; overwrite with our keys
-            # if they differ (they don't for a fresh resource — fresh
-            # counters agree — but stay explicit)
-            self.store._write_revision(self.db, self.res, 1, text, keys=keys)
-            m = self.store._read_manifest(self.db, self.res)
-            m["next_key"] = max(m.get("next_key", 1), max(keys, default=0) + 1)
-            self.store._write_manifest(self.db, self.res, m)
-            return rev
-        return self.store.commit(
-            self.db, self.res, text, keys=keys,
-            author=self.author, author_id=self.author_id,
-            message=message,
+        write = self.store.commit if self.store.exists(self.db, self.res) else self.store.store
+        return write(
+            self.db, self.res, dumps_doc(tree_value(self.root)), keys=tree_keys(self.root),
+            author=self.author, author_id=self.author_id, message=message,
         )

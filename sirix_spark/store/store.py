@@ -64,18 +64,18 @@ Physical design (scale-first):
 from __future__ import annotations
 
 import os
-import re
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
-from sirix_spark.store.manifest import Manifest, RevisionEntry, writer_lock
+from sirix_spark.store.manifest import Manifest, RevisionEntry, stamp, writer_lock
 
 RECORD_KEY = "record_key"
 REVISION_COL = "_revision"
 DELETED_COL = "_deleted"
+_REV_DIR = r"r(\d{6})"  # a revision's directory, r000001, r000002, ...
 
 
 def _nullable(t: DataType) -> DataType:
@@ -108,7 +108,7 @@ class VersionedStore:
         return os.path.isdir(os.path.join(self.root, db))
 
     def exists_resource(self, db: str, res: str) -> bool:
-        return os.path.isfile(os.path.join(self._res_path(db, res), "manifest.json"))
+        return Manifest.exists(self._res_path(db, res))
 
     def drop_database(self, db: str) -> None:
         import shutil
@@ -121,7 +121,7 @@ class VersionedStore:
         shutil.rmtree(self._res_path(db, res), ignore_errors=True)
 
     def _manifest(self, db: str, res: str) -> Manifest:
-        return Manifest(os.path.join(self._res_path(db, res), "manifest.json"))
+        return Manifest(self._res_path(db, res))
 
     def _writer(self, db: str, res: str):
         """The resource's writer lock (manifest.writer_lock)."""
@@ -143,35 +143,11 @@ class VersionedStore:
         if not self.exists_resource(db, res):
             return []
         with self._writer(db, res):
-            return self._recover(db, res)
-
-    def _recover(self, db: str, res: str) -> list[str]:
-        import shutil
-
-        removed: list[str] = []
-        res_path = self._res_path(db, res)
-        head = self._manifest(db, res).latest_revision()
-        for name in sorted(os.listdir(res_path)):
-            full = os.path.join(res_path, name)
-            m = re.fullmatch(r"r(\d{6})", name)
-            if m and os.path.isdir(full) and int(m.group(1)) > head:
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-            elif name == "manifest.json.tmp":
-                os.remove(full)
-                removed.append(full)
-        return removed
+            return self._manifest(db, res).gc_orphans(_REV_DIR)
 
     # ----- commit machinery ------------------------------------------
     def _rev_dir(self, db: str, res: str, revision: int) -> str:
         return os.path.join(self._res_path(db, res), f"r{revision:06d}")
-
-    @staticmethod
-    def _now_iso(timestamp: datetime | None) -> str:
-        dt = timestamp or datetime.now(timezone.utc)
-        if dt.tzinfo is None:
-            dt = dt.replace(tzinfo=timezone.utc)
-        return dt.isoformat()
 
     def store(
         self,
@@ -203,7 +179,7 @@ class VersionedStore:
         manifest.append(
             RevisionEntry(
                 revision=1,
-                committed_at=self._now_iso(commit_timestamp),
+                committed_at=stamp(commit_timestamp),
                 author=author,
                 message=message,
                 kind="checkpoint",
@@ -285,8 +261,8 @@ class VersionedStore:
         force_checkpoint: bool = False,
         full_state: bool = False,
     ) -> int:
-        self._recover(db, res)  # GC orphans of any interrupted commit
         manifest = self._manifest(db, res)
+        manifest.gc_orphans(_REV_DIR)  # of any interrupted commit
         rev = manifest.latest_revision() + 1
         checkpoint = force_checkpoint or (rev % self.checkpoint_every == 0)
         path = self._rev_dir(db, res, rev)
@@ -346,7 +322,7 @@ class VersionedStore:
         manifest.append(
             RevisionEntry(
                 revision=rev,
-                committed_at=self._now_iso(commit_timestamp),
+                committed_at=stamp(commit_timestamp),
                 author=author,
                 message=message,
                 kind=kind,
@@ -479,6 +455,8 @@ class VersionedStore:
             if revision is not None:
                 raise ValueError("pass either revision or timestamp, not both")
             revision = manifest.revision_at(timestamp)
+            if revision is None:
+                raise KeyError(f"no revision committed at or before {timestamp}")
         revision = revision or manifest.latest_revision()
         if revision < 1:
             raise KeyError(f"resource {db}/{res} has no revisions")
@@ -516,15 +494,7 @@ class VersionedStore:
     def open_revisions(self, db: str, res: str, ts1: datetime, ts2: datetime) -> list[int]:
         """jn:open-revisions — all revisions committed in [ts1, ts2]
         (OpenRevisions.java)."""
-        if ts1.tzinfo is None:
-            ts1 = ts1.replace(tzinfo=timezone.utc)
-        if ts2.tzinfo is None:
-            ts2 = ts2.replace(tzinfo=timezone.utc)
-        return [
-            e.revision
-            for e in self._manifest(db, res).entries
-            if ts1 <= e.committed_at_dt <= ts2
-        ]
+        return self._manifest(db, res).revisions_between(ts1, ts2)
 
     def history(self, db: str, res: str) -> DataFrame:
         """/history — revision, timestamp, author, message
@@ -571,12 +541,15 @@ class VersionedStore:
             ):
                 # Full-state commits (rename/revert/compact) carry no
                 # delta sidecar; recover the true delta by diffing
-                # against r-1. Cadence checkpoints DO write their
-                # sidecar (store._write_commit) and fall through to
-                # the one-scan delta path below.
+                # against r-1, by column name over the columns of both
+                # (a revert may drop columns r-1 had). Cadence
+                # checkpoints DO write their sidecar (_commit) and fall
+                # through to the one-scan delta path below.
                 snap = self._read_part(db, res, e, "data")
                 prev = self.doc(db, res, revision=r - 1)
-                parts.append(self._tag(snap.exceptAll(prev), r, False))
+                now = snap.unionByName(prev.limit(0), allowMissingColumns=True)
+                was = prev.unionByName(snap.limit(0), allowMissingColumns=True)
+                parts.append(self._tag(now.exceptAll(was.select(now.columns)), r, False))
                 deleted = prev.select(RECORD_KEY).subtract(snap.select(RECORD_KEY))
                 parts.append(self._tag(self._tombstones(deleted, base.dtypes), r, True))
                 continue
@@ -668,21 +641,28 @@ class VersionedStore:
             d2 = d2.join(keys, RECORD_KEY, "left_semi")
         return d1, d2
 
+    def _diff_docs(self, db: str, res: str, r1: int, r2: int, sort: bool) -> DataFrame:
+        """(record_key, old, new): each record of r1 and r2 as one JSON
+        document over the payload columns of both sides, in order of
+        first appearance or sorted, full-outer joined on the key. A
+        column one side lacks is NULL there, and to_json drops NULL
+        fields, so it shows only where a record holds a value."""
+        d1, d2 = self._diff_sides(db, res, r1, r2)
+        payload = [c for c in dict.fromkeys(d1.columns + d2.columns) if c != RECORD_KEY]
+        if sort:
+            payload.sort()
+
+        def as_doc(df: DataFrame, name: str) -> DataFrame:
+            cols = [(F.col(c) if c in df.columns else F.lit(None)).alias(c) for c in payload]
+            return df.select(F.col(RECORD_KEY), F.to_json(F.struct(*cols)).alias(name))
+
+        return as_doc(d1, "old").join(as_doc(d2, "new"), RECORD_KEY, "full_outer")
+
     def diff(self, db: str, res: str, r1: int, r2: int) -> DataFrame:
         """Record-level semantic diff between two revisions → ops
         DataFrame (insert/delete/update with old/new JSON payloads —
         the JSON-patch shape of JsonDiffSerializer.java)."""
-        d1, d2 = self._diff_sides(db, res, r1, r2)
-        payload = [c for c in d1.columns if c != RECORD_KEY]
-        o = d1.select(
-            F.col(RECORD_KEY),
-            F.to_json(F.struct(*[F.col(c) for c in payload])).alias("old"),
-        )
-        n = d2.select(
-            F.col(RECORD_KEY),
-            F.to_json(F.struct(*[F.col(c) for c in payload])).alias("new"),
-        )
-        joined = o.join(n, RECORD_KEY, "full_outer")
+        joined = self._diff_docs(db, res, r1, r2, sort=False)
         return joined.select(
             RECORD_KEY,
             F.when(F.col("old").isNull(), F.lit("insert"))
@@ -704,21 +684,8 @@ class VersionedStore:
         and flattened JVM-side; one shuffle on (record key, path)."""
         from sirix_spark.operators.diff import json_node_diff
 
-        d1, d2 = self._diff_sides(db, res, r1, r2)
-        payload = sorted(set(d1.columns) | set(d2.columns) - {RECORD_KEY})
-        payload = [c for c in payload if c != RECORD_KEY]
-
-        def as_doc(df):
-            cols = [
-                (F.col(c) if c in df.columns else F.lit(None)).alias(c)
-                for c in payload
-            ]
-            return df.select(F.col(RECORD_KEY), F.to_json(F.struct(*cols)).alias("js"))
-
-        o = as_doc(d1).withColumnRenamed("js", "old_doc")
-        n = as_doc(d2).withColumnRenamed("js", "new_doc")
-        joined = o.join(n, RECORD_KEY, "full_outer")
-        return json_node_diff(joined, [RECORD_KEY], "old_doc", "new_doc")
+        joined = self._diff_docs(db, res, r1, r2, sort=True)
+        return json_node_diff(joined, [RECORD_KEY], "old", "new")
 
     def diff_json(self, db: str, res: str, r1: int, r2: int, mode: str = "node") -> str:
         """Serialized diff in the reference's REST shape

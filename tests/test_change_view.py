@@ -60,3 +60,26 @@ def test_compact_bounds_read_plan(store):
     # after compaction the latest read is a bare checkpoint scan
     assert store._manifest("db", "r").entries[-1].kind == "checkpoint"
     assert store.doc("db", "r").count() == 2
+
+
+def test_change_view_revert_past_schema_growth(spark, tmp_path):
+    """A full-state commit's delta is recovered by column name over
+    the columns of both states: reverting past a commit that added a
+    column compares the two states instead of failing on their
+    different widths, and reports exactly the records that changed."""
+    s = VersionedStore(spark, str(tmp_path / "g"))
+    s.store("db", "r", spark.createDataFrame([(1, 10), (2, 20)], "id long, a long"), key="id")
+    s.upsert_records(                                                    # r2: adds b
+        "db", "r", spark.createDataFrame([(2, 21, "x")], "id long, a long, b string"), key="id"
+    )
+    assert s.revert_to("db", "r", 1) == 3                               # r3: back to (id, a)
+    rows = sorted(
+        (r[RECORD_KEY], r["revision"], r["_deleted"], r["a"], r["b"])
+        for r in s.change_view("db", "r").collect()
+    )
+    assert rows == [
+        (1, 1, False, 10, None),
+        (2, 1, False, 20, None),
+        (2, 2, False, 21, "x"),
+        (2, 3, False, 20, None),
+    ]

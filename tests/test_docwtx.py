@@ -328,9 +328,9 @@ def test_next_key_legacy_fallback_scans_all_revisions(spark, docstore):
     w = DocWtx(docstore, "db", "nk.jn")
     w.insert_subtree_as_first_child('["a","b","c"]')  # keys 1..4
     w.move_to(4).remove().commit()  # r2 keys 1,2,3
-    m = docstore._read_manifest("db", "nk.jn")
-    del m["next_key"]
-    docstore._write_manifest("db", "nk.jn", m)
+    m = docstore._manifest("db", "nk.jn")
+    del m.data["next_key"]
+    m.save()
     assert docstore.next_key("db", "nk.jn") == 5
 
 

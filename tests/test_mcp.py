@@ -134,14 +134,12 @@ def test_query_guard_blocks_jn_doc_into_denied_db(spark, base):
 
     DocumentStore(spark, str(base)).store("secretdb", "r", '{"k":"s3"}')
     h = _handlers(spark, base, deny_databases=("secretdb",))
-    r = h.query(
-        {
-            "query": "jn:doc('secretdb','r').k",
-            "database": "testdb",
-        }
-    )
-    assert r.is_error
-    assert "Access denied" in r.text
+    # with an explicit revision jn:doc reads the revision's text without
+    # a catalog lookup: the guard must cover that read too
+    for q in ("jn:doc('secretdb','r').k", "jn:doc('secretdb','r',1).k"):
+        r = h.query({"query": q, "database": "testdb"})
+        assert r.is_error, q
+        assert "Access denied" in r.text
 
 
 def test_query_readonly_blocks_update_inside_query(ro):

@@ -308,3 +308,35 @@ def test_store_diff_narrowed_to_changed_keys(spark, tmp_path):
             got = store.diff_json(db, res, r1, r2, mode)
             assert got == plain.diff_json(db, res, r1, r2, mode), (r1, r2, mode)
             assert json.loads(got)["diffs"], (r1, r2, mode)
+
+
+def test_store_diff_across_schema_growth(spark, tmp_path):
+    """Both diff modes read the payload columns of both revisions: a
+    record-mode diff back across a commit that added a column runs,
+    and the forward one carries the new column in its insert; NULL
+    fields are left out of every payload."""
+    from sirix_spark.store import VersionedStore
+
+    store = VersionedStore(spark, str(tmp_path / "grow"))
+    db, res = "db", "r"
+    store.store(db, res, spark.createDataFrame([(1, 10), (2, 20)], "id long, a long"), key="id")
+    store.upsert_records(
+        db, res, spark.createDataFrame([(2, 21, None), (3, 30, "x")], "id long, a long, b string"),
+        key="id",
+    )
+
+    fwd = json.loads(store.diff_json(db, res, 1, 2, mode="record"))["diffs"]
+    assert fwd == [
+        {"type": "update", "recordKey": 2, "old": {"a": 20}, "new": {"a": 21}},
+        {"type": "insert", "recordKey": 3, "new": {"a": 30, "b": "x"}},
+    ]
+    back = json.loads(store.diff_json(db, res, 2, 1, mode="record"))["diffs"]
+    assert back == [
+        {"type": "update", "recordKey": 2, "old": {"a": 21}, "new": {"a": 20}},
+        {"type": "delete", "recordKey": 3, "old": {"a": 30, "b": "x"}},
+    ]
+    node = json.loads(store.diff_json(db, res, 2, 1))["diffs"]
+    assert node == [
+        {"type": "update", "recordKey": 2, "path": "/a", "old": "21", "new": "20"},
+        {"type": "delete", "recordKey": 3, "path": "", "old": '{"a":30,"b":"x"}'},
+    ]

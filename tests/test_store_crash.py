@@ -45,38 +45,33 @@ class _Killer:
         self.kill_at = 0
 
 
-def _arm_text_store(xs, killer):
-    """Wrap a text-file store (XmlStore / DocumentStore — same
-    r/k/manifest layout) with kill points at every boundary:
+def _arm_text_store(xs, killer, monkeypatch):
+    """Wrap a text-file store (XmlStore / DocumentStore — one shared
+    r/k/manifest write path) with kill points at every boundary:
 
     op1 before the revision text write, op2 before the keys sidecar,
     op3 before any manifest byte, op4 mid-manifest-tmp (torn write:
     a partial .tmp is left on disk), op5 after the tmp is complete
-    but BEFORE the os.replace commit point."""
-    orig_text = xs._write_text if hasattr(xs, "_write_text") else None
-    orig_rev = xs._write_revision if hasattr(xs, "_write_revision") else None
-    orig_keys = xs._write_keys if hasattr(xs, "_write_keys") else None
+    but BEFORE the os.replace commit point. The manifest write is the
+    catalog's save (manifest.Manifest.save), patched for this test."""
+    from sirix_spark.store import manifest as manifest_mod
 
-    if orig_text is not None:
-        def wt(db, res, n, text):
-            killer.tick()
-            orig_text(db, res, n, text)
-        xs._write_text = wt
-    if orig_rev is not None:
-        def wr(db, res, n, text, keys=None):
-            killer.tick()
-            orig_rev(db, res, n, text, keys=keys)
-        xs._write_revision = wr
-    if orig_keys is not None:
-        def wk(db, res, n, keys):
-            killer.tick()
-            orig_keys(db, res, n, keys)
-        xs._write_keys = wk
+    orig_text = xs._write_text
+    orig_keys = xs._write_keys
 
-    def wm(db, res, m):
+    def wt(db, res, n, text):
+        killer.tick()
+        orig_text(db, res, n, text)
+    xs._write_text = wt
+
+    def wk(db, res, n, keys):
+        killer.tick()
+        orig_keys(db, res, n, keys)
+    xs._write_keys = wk
+
+    def wm(m):
         killer.tick()  # before any manifest byte
-        p = xs._manifest_path(db, res)
-        with open(p + ".tmp", "w") as f:
+        with open(m.path + ".tmp", "w") as f:
             f.write('{"revisions": [')  # torn prefix on disk
             try:
                 killer.tick()  # mid-tmp: stranded partial tmp
@@ -84,30 +79,30 @@ def _arm_text_store(xs, killer):
                 raise
             f.seek(0)
             f.truncate()
-            json.dump(m, f, indent=1)
+            json.dump(m.data, f, indent=1)
         killer.tick()  # tmp complete, BEFORE the os.replace commit
-        os.replace(p + ".tmp", p)
-    xs._write_manifest = wm
+        os.replace(m.path + ".tmp", m.path)
+    monkeypatch.setattr(manifest_mod.Manifest, "save", wm)
 
 
 XML_R1 = "<root><a>one</a><b/></root>"
 XML_R2 = "<root><a>CHANGED</a><b/><c/></root>"
 
 
-def _xml_fixture(kill_at: int):
+def _xml_fixture(kill_at: int, monkeypatch):
     root = tempfile.mkdtemp()
     xs = XmlStore(root)
     xs.store("db", "r", XML_R1, keys=[1, 2, 3])
     killer = _Killer(kill_at)
-    _arm_text_store(xs, killer)
+    _arm_text_store(xs, killer, monkeypatch)
     return root, xs, killer
 
 
 # XmlStore.commit with keys: text, keys, manifest-pre, manifest-mid,
 # manifest-pre-replace = 5 op boundaries.
 @pytest.mark.parametrize("kill_at", [1, 2, 3, 4, 5])
-def test_xmlstore_kill_points(kill_at):
-    root, xs, killer = _xml_fixture(kill_at)
+def test_xmlstore_kill_points(kill_at, monkeypatch):
+    root, xs, killer = _xml_fixture(kill_at, monkeypatch)
     with pytest.raises(KillError):
         xs.commit("db", "r", XML_R2, keys=[1, 2, 3, 4, 5])
 
@@ -137,10 +132,10 @@ def test_xmlstore_kill_points(kill_at):
     assert fresh.read_keys("db", "r", 2) == [1, 2, 3, 4, 5]
 
 
-def test_xmlstore_kill_clean_run_control():
+def test_xmlstore_kill_clean_run_control(monkeypatch):
     """kill_at=0 (never) sanity-pins the op-boundary instrumentation:
     the wrapped store commits exactly like an unwrapped one."""
-    root, xs, killer = _xml_fixture(0)
+    root, xs, killer = _xml_fixture(0, monkeypatch)
     assert xs.commit("db", "r", XML_R2, keys=[1, 2, 3, 4, 5]) == 2
     assert killer.n == 5  # all five boundaries crossed exactly once
     assert XmlStore(root).read_text("db", "r", 2) == XML_R2
@@ -151,17 +146,17 @@ DOC_R1 = '{"a":1}'
 DOC_R2 = '{"a":2,"b":[1,2]}'
 
 
-@pytest.mark.parametrize("kill_at", [1, 2, 3, 4])
-def test_docstore_kill_points(spark, kill_at):
-    """DocumentStore.commit: r+k files write in one _write_revision
-    (op1), then manifest pre/mid/pre-replace (ops 2-4)."""
+@pytest.mark.parametrize("kill_at", [1, 2, 3, 4, 5])
+def test_docstore_kill_points(spark, kill_at, monkeypatch):
+    """DocumentStore.commit: the same five boundaries as XmlStore's
+    (text, keys, manifest pre/mid/pre-replace)."""
     from sirix_spark.store.docstore import DocumentStore
 
     root = tempfile.mkdtemp()
     ds = DocumentStore(spark, root)
     ds.store("db", "r.jn", DOC_R1)
     killer = _Killer(kill_at)
-    _arm_text_store(ds, killer)
+    _arm_text_store(ds, killer, monkeypatch)
     with pytest.raises(KillError):
         ds.commit("db", "r.jn", DOC_R2, keys=[1, 2, 3, 4, 5])
 
