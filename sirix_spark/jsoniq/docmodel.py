@@ -34,6 +34,7 @@ from __future__ import annotations
 import atexit
 import json
 import logging
+from functools import cached_property
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -255,6 +256,12 @@ class DocEvaluator:
         # materialized, so a long session cannot accumulate
         # replicated disk blocks unboundedly (ADVICE r8)
         self._persists: list[DataFrame] = []
+
+    @cached_property
+    def xml_store(self):
+        """The XML store of this evaluator's store: every xml: read and
+        write goes through it, so a guarded store guards them too."""
+        return self.store.xml_store()
 
     # documents up to this many bytes shred DRIVER-side (expat +
     # one Arrow batch): the mapInPandas round trip ships the text in
@@ -2198,9 +2205,7 @@ class DocEvaluator:
         if not isinstance(a, P.Lit) or not isinstance(a.value, str):
             return None
         uri = a.value
-        from sirix_spark.store.xmlstore import XmlStore
-
-        xs = XmlStore(self.store.root)
+        xs = self.xml_store
         hits = []
         # XML databases live under the XmlStore's own namespace dir
         # (root/__xml__/<db>/<res>)
@@ -2417,14 +2422,13 @@ class DocEvaluator:
             # (function/xml/diff/Diff.java; store/xmldiff.py computes
             # it exactly from the key sidecars)
             from sirix_spark.store.xmldiff import xml_diff
-            from sirix_spark.store.xmlstore import XmlStore
 
             lits = [a.value for a in node.args[:2] if isinstance(a, P.Lit)]
             if len(lits) != 2:
                 raise JsoniqCompileError("xml:diff needs (db, res, r1, r2)")
             r1 = self._static_int(node.args[2], scope)
             r2 = self._static_int(node.args[3], scope)
-            script = xml_diff(XmlStore(self.store.root), lits[0], lits[1], r1, r2)
+            script = xml_diff(self.xml_store, lits[0], lits[1], r1, r2)
             df = stream
             if script is None:
                 df = df.limit(0)
@@ -2862,7 +2866,6 @@ class DocEvaluator:
         )
         from sirix_spark.jsoniq.xpath import serialize_result
         from sirix_spark.sources.xml_source import shred_xml
-        from sirix_spark.store.xmlstore import XmlStore
 
         name = node.name
         base = node.args[0]
@@ -2872,7 +2875,7 @@ class DocEvaluator:
         if len(lits) != 2:
             raise JsoniqCompileError(f"{name} needs literal (db, res)")
         db, res = lits
-        xs = XmlStore(self.store.root)
+        xs = self.xml_store
 
         if name.startswith("xml:find-"):
             kind = name[len("xml:find-"):-len("-index")]
@@ -3003,9 +3006,7 @@ class DocEvaluator:
         xml:open-revisions(db,res,$t1,$t2) over the XmlStore sidecar.
         Items carry the revision's serialized XML as their text and
         the revision number as identity (so sdb:revision composes)."""
-        from sirix_spark.store.xmlstore import XmlStore
-
-        xs = XmlStore(self.store.root)
+        xs = self.xml_store
 
         def _dt_arg(a):
             if (
@@ -4006,9 +4007,7 @@ class DocEvaluator:
             # Literal node is shared across all call sites.
             lits = [a.value for a in base.args if isinstance(a, P.Lit)]
             if len(lits) == len(base.args) and len(lits) in (2, 3):
-                from sirix_spark.store.xmlstore import XmlStore
-
-                xs = XmlStore(self.store.root)
+                xs = self.xml_store
                 rev = (
                     int(lits[2])
                     if len(lits) == 3

@@ -404,7 +404,6 @@ class _PyInterp:
             # existing one; keys assigned through the write trx so
             # node identity is stable from revision 1. xml:load reads
             # the document from a local file path/URI (io/Load.java).
-            from sirix_spark.store.xmlstore import XmlStore
             from sirix_spark.store.xmlwtx import tree_from_rows, tree_keys
 
             db = self._one(self.eval(node.args[0], env))
@@ -423,14 +422,13 @@ class _PyInterp:
 
             t = tree_from_rows(_shred_one("f", str(src)), None)
             # store() replaces an existing resource (createNew semantics)
-            XmlStore(self.ev.store.root).store(db, res, serialize_tree(t), keys=tree_keys(t))
+            self.ev.xml_store.store(db, res, serialize_tree(t), keys=tree_keys(t))
             return []
         if name == "xml:import":
             # io/Import.java: diff-import an externally-edited
             # document as the next revision; FMSE-lite matching keeps
             # unchanged nodes' keys (store/xmldiff.fmse_import)
             from sirix_spark.store.xmldiff import fmse_import
-            from sirix_spark.store.xmlstore import XmlStore
 
             db = self._one(self.eval(node.args[0], env))
             res = self._one(self.eval(node.args[1], env))
@@ -443,7 +441,7 @@ class _PyInterp:
                         path = path[1:]
                 with open(path) as f:
                     src = f.read()
-            fmse_import(XmlStore(self.ev.store.root), db, res, src)
+            fmse_import(self.ev.xml_store, db, res, src)
             return []
         if name == "jn:drop-database":
             self.ev.store.drop_database(self._one(self.eval(node.args[0], env)))
@@ -543,8 +541,6 @@ class _PyInterp:
         if name.startswith("xml:create-") and name.endswith("-index"):
             # function/xml/index/create/*: register the definition in
             # the XmlStore catalogue (the node table serves the scans)
-            from sirix_spark.store.xmlstore import XmlStore
-
             kind = name[len("xml:create-"):-len("-index")]
             tgt = self._one(self.eval(node.args[0], env))
             if not (isinstance(tgt, tuple) and tgt[0] == "__xmldoc__"):
@@ -560,7 +556,7 @@ class _PyInterp:
                 paths = tuple(
                     str(v.value) for v in self.eval(rest[0], env)
                 )
-            XmlStore(self.ev.store.root).create_index(
+            self.ev.xml_store.create_index(
                 db, res, kind, content_type, paths
             )
             return [PyItem({})]

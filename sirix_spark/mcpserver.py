@@ -334,47 +334,59 @@ class AuditLog:
 def _guarded_store(store, access: AccessControl):
     """GuardedJsonDBStore.java analog: the query tool hands the whole
     DocumentStore to the JSONiq evaluator, so access control must hold
-    INSIDE query evaluation too (jn:doc over a denied database). One
-    choke point guards every read (_res_dir — the revision catalog,
-    each revision's text and its keys are all found through it) and
-    the write entry points enforce read-only."""
+    INSIDE query evaluation too (jn:doc or xml:doc over a denied
+    database). One choke point guards every read of both text stores
+    (_res_dir — the revision catalog, each revision's text and its
+    keys are all found through it): the JSON documents and the XML
+    resources beside them, which the evaluator reaches only through
+    the store's xml_store(). The write entry points enforce read-only."""
     from sirix_spark.store.docstore import DocumentStore
+    from sirix_spark.store.xmlstore import XmlStore
 
-    class GuardedDocumentStore(DocumentStore):
+    class Guard:
+        """Mixed in before a TextRevisionStore class."""
+
         def _res_dir(self, db, res):
             access.check_access(db, res)
-            return DocumentStore._res_dir(self, db, res)
+            return super()._res_dir(db, res)
 
         def store(self, db, res, *a, **kw):
             access.check_write_access()
             access.check_access(db, res)
-            return DocumentStore.store(self, db, res, *a, **kw)
+            return super().store(db, res, *a, **kw)
 
+        def commit(self, db, res, *a, **kw):
+            access.check_write_access()
+            return super().commit(db, res, *a, **kw)
+
+        def drop_database(self, db):
+            access.check_write_access()
+            access.check_database_access(db)
+            return super().drop_database(db)
+
+        def drop_resource(self, db, res):
+            access.check_write_access()
+            return super().drop_resource(db, res)
+
+        def create_index(self, db, res, *a, **kw):
+            access.check_write_access()
+            return super().create_index(db, res, *a, **kw)
+
+        def drop_index(self, db, res, *a, **kw):
+            access.check_write_access()
+            return super().drop_index(db, res, *a, **kw)
+
+    class GuardedXmlStore(Guard, XmlStore):
+        pass
+
+    class GuardedDocumentStore(Guard, DocumentStore):
         def load(self, db, res, *a, **kw):
             access.check_write_access()
             access.check_access(db, res)
             return DocumentStore.load(self, db, res, *a, **kw)
 
-        def commit(self, db, res, *a, **kw):
-            access.check_write_access()
-            return DocumentStore.commit(self, db, res, *a, **kw)
-
-        def drop_database(self, db):
-            access.check_write_access()
-            access.check_database_access(db)
-            return DocumentStore.drop_database(self, db)
-
-        def drop_resource(self, db, res):
-            access.check_write_access()
-            return DocumentStore.drop_resource(self, db, res)
-
-        def create_index(self, db, res, *a, **kw):
-            access.check_write_access()
-            return DocumentStore.create_index(self, db, res, *a, **kw)
-
-        def drop_index(self, db, res, *a, **kw):
-            access.check_write_access()
-            return DocumentStore.drop_index(self, db, res, *a, **kw)
+        def xml_store(self):
+            return GuardedXmlStore(self.root)
 
     g = GuardedDocumentStore.__new__(GuardedDocumentStore)
     g.__dict__.update(store.__dict__)

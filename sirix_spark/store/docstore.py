@@ -450,6 +450,13 @@ class DocumentStore(TextRevisionStore):
     def _node_count(self, text: str) -> int:
         return enum_count(loads_doc(text))
 
+    def xml_store(self):
+        """The XML resources kept beside this store's (root/__xml__):
+        the one XmlStore the JSONiq evaluator reads and writes."""
+        from sirix_spark.store.xmlstore import XmlStore
+
+        return XmlStore(self.root)
+
     def doc(self, db: str, res: str, revision: int | None = None) -> DocHandle:
         if revision is None:
             revision = self.latest_revision(db, res)

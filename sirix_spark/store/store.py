@@ -21,26 +21,31 @@ Reference parity map (SURVEY.md §2.1, §2.7, §2.12):
 Physical design (scale-first):
 - Each commit writes its delta (upserts parquet + deleted-keys
   parquet); every `checkpoint_every` commits a full checkpoint is
-  materialized. A delta commit also writes `cum/`: the latest-wins
-  merge of every change since its checkpoint, tombstones included,
-  built from the previous revision's `cum/` plus this commit's delta
-  in one task (no shuffle). doc(r) is then
+  materialized. A revision's state is its checkpoint plus one change
+  set: the latest-wins merge (`_latest`) of every change since the
+  checkpoint, tombstones included. doc(r), a cadence checkpoint's
+  data/ and every later state apply it the same way (`_apply`):
   checkpoint ⋉̸ cum ∪ cum.live — the checkpoint left-anti-joined
-  against the part's keys, plus its live rows — at any depth: three
-  parquet scans, no window, and the checkpoint is never shuffled (the
-  planner broadcasts a small cum/ by its size estimate). This is the
+  against the change set's keys, plus its live rows. This is the
   Spark analog of the reference's sliding snapshot, which versions
   pages as deltas against the last full dump
   (docs/ARCHITECTURE.md:1560), and of Iceberg/Delta merge-on-read.
+- A delta commit stores its change set as `cum/`, merged from the
+  previous revision's change set plus this commit's delta in one task
+  (no shuffle), so doc(r) is three parquet scans at any depth, no
+  window, and the checkpoint is never shuffled (the planner
+  broadcasts a small cum/ by its size estimate). A delta without
+  cum/ — committed before it existed, or a commit that changed
+  nothing since its checkpoint — has its change set merged from the
+  cycle's upserts/ and deletes/ when read: the same plan with the
+  window over the delta parts, never over the checkpoint.
 - The per-revision upserts/ and deletes/ stay next to cum/:
   change_view, versions_view and history_view read exactly one
   revision's changes from them. A cum/ holds at most
   `checkpoint_every` × commit size rows (fewer when commits touch the
-  same keys), and a checkpoint starts a new chain, so the space it
-  adds is bounded by the checkpoint interval, not by history length.
-- Revisions committed before cum/ existed, and the deltas that follow
-  one in its cycle, keep the older merge: the checkpoint unioned with
-  every delta since it, latest revision wins per record_key.
+  same keys), and a checkpoint starts a new change set, so the space
+  it adds is bounded by the checkpoint interval, not by history
+  length.
 - Snapshots are plain parquet: columnar, stats-pruned — the
   "projection index is the storage itself" property (SURVEY.md §1.3).
 - Schemas live in the revision catalog (manifest.py), as in Delta's
@@ -54,7 +59,8 @@ Physical design (scale-first):
   inference.
 - Record identity: a caller-designated key column is renamed to
   `record_key` (the stable 64-bit nodeKey analog,
-  docs/ARCHITECTURE.md:70-100).
+  docs/ARCHITECTURE.md:70-100). A commit holds each key at most once:
+  one that repeats a key is rejected with a ValueError naming it.
 - One writer per resource (the reference's one write transaction per
   resource, JsonNodeTrx): every commit holds manifest.writer_lock from
   its orphan GC and head read to its manifest append; read-modify-write
@@ -65,6 +71,7 @@ from __future__ import annotations
 
 import os
 from datetime import datetime
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -174,7 +181,7 @@ class VersionedStore:
             os.makedirs(self._res_path(db, res), exist_ok=True)
         keyed = df.withColumnRenamed(key, RECORD_KEY)
         schemas: dict[str, str] = {}
-        n = self._write_part(self._rev_dir(db, res, 1), "data", keyed, schemas).count()
+        n = self._count(self._write_part(self._rev_dir(db, res, 1), "data", keyed, schemas))
         manifest = self._manifest(db, res)
         manifest.append(
             RevisionEntry(
@@ -207,11 +214,11 @@ class VersionedStore:
         self, rev_path: str, part: str, df: DataFrame, schemas: dict[str, str]
     ) -> DataFrame:
         """Write one part (data/, upserts/, deletes/ or cum/) of a
-        commit and read it back. The read-back gives footer-metadata
-        counts without re-running the plan that produced `df`. Its
-        schema is the plan's made nullable — the schema the parquet
-        write stores — so the manifest records it (`schemas[part]`)
-        and the read-back needs no schema-inference job."""
+        commit and read it back, so it is counted without re-running
+        the plan that produced `df`. Its schema is the plan's made
+        nullable — the schema the parquet write stores — so the
+        manifest records it (`schemas[part]`) and the read-back needs
+        no schema-inference job."""
         path = os.path.join(rev_path, part)
         df.write.mode("errorifexists").parquet(path)
         schema = _nullable(df.schema)
@@ -232,14 +239,80 @@ class VersionedStore:
         return df.withColumns({REVISION_COL: F.lit(revision), DELETED_COL: F.lit(deleted)})
 
     @staticmethod
-    def _tombstones(keys: DataFrame, dtypes: list[tuple[str, str]]) -> DataFrame:
-        """Deleted keys shaped as records with the columns `dtypes`
-        and a NULL payload, so they union with the records."""
-        return keys.select(
-            *[
-                F.col(c) if c == RECORD_KEY else F.lit(None).cast(t).alias(c)
-                for c, t in dtypes
-            ]
+    def _count(part: DataFrame) -> int:
+        """Rows of a written part. A commit holds each record_key at
+        most once, so a part that repeats one is rejected, naming the
+        key, before the manifest is touched; the next commit removes
+        the part as an orphan and reuses its revision number. The key
+        check rides on the count's job: coalesce(1) reads the part in
+        one task, which satisfies both aggregates, so there is no
+        exchange."""
+        n, keyed, distinct = (
+            part.coalesce(1)
+            .agg(F.count(F.lit(1)), F.count(RECORD_KEY), F.count_distinct(RECORD_KEY))
+            .first()
+        )
+        if keyed != distinct:
+            dup = part.groupBy(RECORD_KEY).count().filter(F.col("count") > 1).first()
+            raise ValueError(f"record_key {dup[RECORD_KEY]!r} occurs twice in one commit")
+        return n
+
+    def _changes(self, db: str, res: str, entry: RevisionEntry) -> list[DataFrame]:
+        """One delta's changes, tagged with its revision: its upserts
+        and its deleted keys as key-only tombstones (a union pads
+        their payload), empty parts left out."""
+        sized = (("upserts", entry.n_upserts, False), ("deletes", entry.n_deletes, True))
+        return [
+            self._tag(self._read_part(db, res, entry, part), entry.revision, deleted)
+            for part, n, deleted in sized
+            if n
+        ]
+
+    @staticmethod
+    def _latest(parts: list[DataFrame | None]) -> DataFrame | None:
+        """The latest-wins merge of tagged changes: per record_key the
+        row of the highest revision, tombstones kept; None when there
+        are none. coalesce(1) satisfies the window's distribution, so
+        there is no exchange: one task reads every part and merges."""
+        parts = [p for p in parts if p is not None]
+        if not parts:
+            return None
+        merged = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+        w = Window.partitionBy(RECORD_KEY).orderBy(F.col(REVISION_COL).desc())
+        return (
+            merged.coalesce(1)
+            .withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+
+    def _since_checkpoint(
+        self, db: str, res: str, manifest: Manifest, entry: RevisionEntry
+    ) -> DataFrame | None:
+        """The change set of `entry`: the latest-wins merge of every
+        change since its checkpoint, None at a checkpoint or when
+        nothing changed. A delta's recorded cum/; for a delta committed
+        without one (before cum/ existed, or after a commit that
+        changed nothing), the same merge over its cycle's parts."""
+        if entry.kind == "checkpoint":
+            return None
+        if entry.schema("cum") is not None:
+            return self._read_part(db, res, entry, "cum")
+        ckpt = manifest.latest_checkpoint_at_or_before(entry.revision)
+        cycle = [manifest.entry(r) for r in range(ckpt + 1, entry.revision + 1)]
+        return self._latest([p for e in cycle for p in self._changes(db, res, e)])
+
+    @staticmethod
+    def _apply(base: DataFrame, cum: DataFrame | None) -> DataFrame:
+        """A checkpoint's state with a change set applied:
+        base ⋉̸ cum.keys ∪ cum.live — the rows whose key the change set
+        does not hold, plus its live rows. Columns: the checkpoint's
+        first, then new ones in order of first appearance."""
+        if cum is None:
+            return base
+        live = cum.filter(~F.col(DELETED_COL)).drop(REVISION_COL, DELETED_COL)
+        return base.join(cum.select(RECORD_KEY), RECORD_KEY, "left_anti").unionByName(
+            live, allowMissingColumns=True
         )
 
     def _write_commit(self, db: str, res: str, *args, **kw) -> int:
@@ -258,130 +331,69 @@ class VersionedStore:
         message: str | None = None,
         author: str | None = None,
         commit_timestamp: datetime | None = None,
-        force_checkpoint: bool = False,
         full_state: bool = False,
     ) -> int:
         manifest = self._manifest(db, res)
         manifest.gc_orphans(_REV_DIR)  # of any interrupted commit
         rev = manifest.latest_revision() + 1
-        checkpoint = force_checkpoint or (rev % self.checkpoint_every == 0)
+        checkpoint = full_state or rev % self.checkpoint_every == 0
         path = self._rev_dir(db, res, rev)
-        n_up = n_del = 0
-        schemas: dict[str, str] = {}
+        entry = RevisionEntry(
+            revision=rev,
+            committed_at="",  # stamped at the commit point, below
+            author=author,
+            message=message,
+            kind="checkpoint" if checkpoint else "delta",
+            schemas={},
+        )
+
+        def write(part: str, df: DataFrame) -> DataFrame:
+            return self._write_part(path, part, df, entry.schemas)
+
         if full_state:
             # `upserts` IS the complete new state (schema-changing
             # commits like rename): write it as a checkpoint directly.
-            # Count the WRITTEN files, not the plan: parquet count is
-            # footer-metadata-only, so this avoids re-running the
-            # upstream computation a second time.
-            n_up = self._write_part(path, "data", upserts, schemas).count()
-            kind = "checkpoint"
+            entry.n_upserts = self._count(write("data", upserts))
         else:
-            # Write the DELTA (upserts/ + deletes/). A checkpoint
-            # commit writes it too, as a sidecar next to the
-            # materialized full state (data/): the sidecar lets
-            # change_view read ONE file per checkpoint commit instead
-            # of recovering the delta with an exceptAll against a
-            # merge-on-read doc() — keeping change_view/history_view
-            # plans O(total changes) regardless of the checkpoint
-            # interval. Reading the written delta back also yields
-            # footer-metadata counts and feeds the state merge without
-            # re-evaluating the upsert plan.
+            # Write the DELTA (upserts/ + deletes/). A cadence
+            # checkpoint writes it too, as a sidecar next to its data/:
+            # change_view then reads ONE part per checkpoint commit
+            # instead of recovering the delta with an exceptAll against
+            # doc(), keeping change_view/history_view plans O(total
+            # changes) regardless of the checkpoint interval.
             if upserts is not None:
-                upserts = self._write_part(path, "upserts", upserts, schemas)
-                n_up = upserts.count()
+                entry.n_upserts = self._count(write("upserts", upserts))
             if delete_keys is not None:
-                delete_keys = self._write_part(
-                    path, "deletes", delete_keys.select(RECORD_KEY), schemas
-                )
-                n_del = delete_keys.count()
-            if checkpoint:
-                state = self.doc(db, res, revision=rev - 1)
-                if delete_keys is not None:
-                    state = state.join(
-                        delete_keys.select(RECORD_KEY), RECORD_KEY, "left_anti"
-                    )
-                if upserts is not None:
-                    # allowMissingColumns: new fields appear as NULL on
-                    # old records — the dynamic-schema growth the
-                    # reference tracks in its path summary
-                    # (PathSummaryWriter.java / mergeSchema).
-                    state = state.join(
-                        upserts.select(RECORD_KEY), RECORD_KEY, "left_anti"
-                    ).unionByName(upserts, allowMissingColumns=True)
-                self._write_part(path, "data", state, schemas)
-            else:
-                changes = []
-                if n_up:
-                    changes.append(self._tag(upserts, rev, False))
-                if n_del:
-                    # key-only tombstones: the union pads the payload
-                    changes.append(self._tag(delete_keys, rev, True))
-                self._write_cum(db, res, manifest.entry(rev - 1), path, changes, schemas)
-            kind = "checkpoint" if checkpoint else "delta"
-        manifest.append(
-            RevisionEntry(
-                revision=rev,
-                committed_at=stamp(commit_timestamp),
-                author=author,
-                message=message,
-                kind=kind,
-                n_upserts=n_up,
-                n_deletes=n_del,
-                schemas=schemas,
+                entry.n_deletes = self._count(write("deletes", delete_keys.select(RECORD_KEY)))
+            prev = manifest.entry(rev - 1)
+            cum = self._latest(
+                [self._since_checkpoint(db, res, manifest, prev), *self._changes(db, res, entry)]
             )
-        )
+            if checkpoint:
+                # allowMissingColumns in _apply: new fields appear as
+                # NULL on old records — the dynamic-schema growth the
+                # reference tracks in its path summary
+                # (PathSummaryWriter.java / mergeSchema).
+                ckpt = manifest.entry(manifest.latest_checkpoint_at_or_before(rev - 1))
+                base = self._read_part(db, res, ckpt, "data")
+                write("data", self._apply(base, cum))
+            elif cum is not None:
+                write("cum", cum)
+        entry.committed_at = stamp(commit_timestamp)
+        manifest.append(entry)
         return rev
 
-    def _write_cum(
-        self,
-        db: str,
-        res: str,
-        prev: RevisionEntry,
-        path: str,
-        changes: list[DataFrame],
-        schemas: dict[str, str],
-    ) -> None:
-        """Write a delta commit's cum/: the latest-wins merge of every
-        change since the checkpoint, tombstones included — the previous
-        revision's cum/ plus `changes` (this commit's tagged parts,
-        empty ones left out as doc()'s union merge leaves them out).
-        A delta after a checkpoint starts a new chain. A delta after a
-        delta without cum/ (committed before cum/ existed) writes none,
-        and its cycle keeps the union merge.
-
-        coalesce(1) satisfies the window's distribution, so there is no
-        exchange: one task reads the previous part and this delta and
-        writes one file."""
-        if prev.kind == "delta":
-            if prev.schema("cum") is None:
-                return
-            changes = [self._read_part(db, res, prev, "cum"), *changes]
-        if not changes:
-            return
-        merged = changes[0]
-        for p in changes[1:]:
-            merged = merged.unionByName(p, allowMissingColumns=True)
-        w = Window.partitionBy(RECORD_KEY).orderBy(F.col(REVISION_COL).desc())
-        latest = (
-            merged.coalesce(1)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        self._write_part(path, "cum", latest, schemas)
-
     # ----- update operators (JSONiq update syntax, §2.12) ------------
-    def insert_records(self, db: str, res: str, records: DataFrame, key: str, **kw) -> int:
-        """insert/append json (JsonNodeTrx insertSubtree :183-194)."""
+    def upsert_records(self, db: str, res: str, records: DataFrame, key: str, **kw) -> int:
+        """insert/append json (JsonNodeTrx insertSubtree :183-194) and
+        replace by key: one delta commit of `records`, whose `key`
+        column becomes record_key; a record whose key exists replaces
+        it."""
         return self._write_commit(
             db, res, records.withColumnRenamed(key, RECORD_KEY), None, **kw
         )
 
-    def upsert_records(self, db: str, res: str, records: DataFrame, key: str, **kw) -> int:
-        return self._write_commit(
-            db, res, records.withColumnRenamed(key, RECORD_KEY), None, **kw
-        )
+    insert_records = upsert_records
 
     def replace_where(self, db: str, res: str, cond, updates: dict, **kw) -> int:
         """replace json value of ... (JsonNodeTrx.java:107-115):
@@ -440,16 +452,13 @@ class VersionedStore:
         """Open the resource at a revision / point in time
         (jn:doc Doc.java, jn:open DocByPointInTime.java).
 
-        Merge-on-read against the latest checkpoint ≤ r. A delta
-        revision with a cum/ part is checkpoint ⋉̸ cum ∪ cum.live: the
-        checkpoint's rows whose key the part does not hold, plus the
-        part's live rows — the same plan at every depth, and the
-        checkpoint is not shuffled. Columns come out as in the union
-        merge: the checkpoint's first, then new ones in order of first
-        appearance. A delta without cum/ (committed before it existed)
-        unions the checkpoint with every delta since it, latest
-        revision wins per key. Either way the cost is independent of
-        total history length."""
+        Merge-on-read: the latest checkpoint ≤ r with r's change set
+        applied (`_apply`), the same plan at every revision and depth:
+        the checkpoint's rows whose key the change set does not hold,
+        plus its live rows. The checkpoint is not shuffled, and the
+        cost is independent of total history length. Columns: the
+        checkpoint's first, then new ones in order of first
+        appearance."""
         manifest = self._manifest(db, res)
         if timestamp is not None:
             if revision is not None:
@@ -461,35 +470,9 @@ class VersionedStore:
         if revision < 1:
             raise KeyError(f"resource {db}/{res} has no revisions")
         entry = manifest.entry(revision)  # bounds check
-        ckpt = manifest.latest_checkpoint_at_or_before(revision)
-        base = self._read_part(db, res, manifest.entry(ckpt), "data")
-        if ckpt == revision:
-            return base
-        if entry.schema("cum") is not None:
-            cum = self._read_part(db, res, entry, "cum")
-            live = cum.filter(~F.col(DELETED_COL)).drop(REVISION_COL, DELETED_COL)
-            return base.join(cum.select(RECORD_KEY), RECORD_KEY, "left_anti").unionByName(
-                live, allowMissingColumns=True
-            )
-        parts = [self._tag(base, ckpt, False)]
-        for r in range(ckpt + 1, revision + 1):
-            e = manifest.entry(r)
-            if e.kind == "checkpoint":  # unreachable (ckpt is latest), safety
-                continue
-            if e.n_upserts:
-                parts.append(self._tag(self._read_part(db, res, e, "upserts"), r, False))
-            if e.n_deletes:
-                dl = self._read_part(db, res, e, "deletes")
-                parts.append(self._tag(self._tombstones(dl, base.dtypes), r, True))
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p, allowMissingColumns=True)
-        w = Window.partitionBy(RECORD_KEY).orderBy(F.col(REVISION_COL).desc())
-        return (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("_rn") == 1) & (~F.col(DELETED_COL)))
-            .drop("_rn", REVISION_COL, DELETED_COL)
-        )
+        ckpt = manifest.entry(manifest.latest_checkpoint_at_or_before(revision))
+        base = self._read_part(db, res, ckpt, "data")
+        return self._apply(base, self._since_checkpoint(db, res, manifest, entry))
 
     def open_revisions(self, db: str, res: str, ts1: datetime, ts2: datetime) -> list[int]:
         """jn:open-revisions — all revisions committed in [ts1, ts2]
@@ -551,16 +534,14 @@ class VersionedStore:
                 was = prev.unionByName(snap.limit(0), allowMissingColumns=True)
                 parts.append(self._tag(now.exceptAll(was.select(now.columns)), r, False))
                 deleted = prev.select(RECORD_KEY).subtract(snap.select(RECORD_KEY))
-                parts.append(self._tag(self._tombstones(deleted, base.dtypes), r, True))
+                parts.append(self._tag(deleted, r, True))
                 continue
             if os.path.exists(up_path):
                 parts.append(self._tag(self._read_part(db, res, e, "upserts"), r, False))
             if os.path.exists(del_path):
-                dl = self._read_part(db, res, e, "deletes")
-                parts.append(self._tag(self._tombstones(dl, base.dtypes), r, True))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+                # key-only tombstones: the union pads the payload
+                parts.append(self._tag(self._read_part(db, res, e, "deletes"), r, True))
+        out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
         return out.withColumnRenamed(REVISION_COL, "revision")
 
     def compact(self, db: str, res: str, **kw) -> int:
@@ -619,15 +600,15 @@ class VersionedStore:
     # ----- diff (jn:diff, BasicJsonDiff.java:21) ---------------------
     def _changed_keys(self, db: str, res: str, r1: int, r2: int) -> DataFrame | None:
         """Keys that can differ between r1 and r2, or None if unknown.
-        When both share a checkpoint and the later one has cum/, a key
-        absent from that part is unchanged from the checkpoint through
-        both revisions."""
+        When both share a checkpoint, a key absent from the later one's
+        change set is unchanged from the checkpoint through both
+        revisions."""
         manifest = self._manifest(db, res)
-        later = manifest.entry(max(r1, r2))
         ckpt = manifest.latest_checkpoint_at_or_before
-        if ckpt(r1) != ckpt(r2) or later.schema("cum") is None:
+        if ckpt(r1) != ckpt(r2):
             return None
-        return self._read_part(db, res, later, "cum").select(RECORD_KEY)
+        cum = self._since_checkpoint(db, res, manifest, manifest.entry(max(r1, r2)))
+        return None if cum is None else cum.select(RECORD_KEY)
 
     def _diff_sides(self, db: str, res: str, r1: int, r2: int) -> tuple[DataFrame, DataFrame]:
         """doc(r1) and doc(r2), narrowed to the keys that can differ

@@ -47,7 +47,9 @@ def stream_ingest(
 ):
     """File-source streaming ingest: each micro-batch becomes one
     commit (= one revision) in the versioned store — streaming writes
-    with full time travel over the result.
+    with full time travel over the result. A commit holds each key at
+    most once, so a batch that repeats a key fails the query with the
+    store's ValueError and commits nothing.
 
     Returns the StreamingQuery; callers use trigger availableNow +
     awaitTermination for batch-drain semantics."""

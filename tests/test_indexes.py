@@ -15,10 +15,9 @@ def ctx(spark, sf_dir, tmp_path_factory):
     store = VersionedStore(spark, str(tmp_path_factory.mktemp("idx_store")))
     from sirix_spark.tables import load
 
-    li = load(spark, sf_dir, "lineitem").withColumn(
-        "rid",
-        F.col("l_orderkey") * 10 + F.col("l_linenumber"),
-    )
+    # (l_orderkey, l_linenumber) repeats in the generated lineitem
+    # data, and a commit holds each key at most once
+    li = load(spark, sf_dir, "lineitem").withColumn("rid", F.monotonically_increasing_id())
     store.store("db", "li", li, key="rid")
     idx = ProjectionIndexes(store)
     entry = idx.create_projection_index(

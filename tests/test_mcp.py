@@ -142,6 +142,39 @@ def test_query_guard_blocks_jn_doc_into_denied_db(spark, base):
         assert "Access denied" in r.text
 
 
+def test_query_guard_blocks_xml_reads_into_denied_db(spark, base):
+    """The XML twin: the evaluator reaches XML resources through the
+    one XmlStore of its (guarded) store, so xml:doc into a denied
+    database is refused as jn:doc is, with or without a revision."""
+    from sirix_spark.store.xmlstore import XmlStore
+
+    XmlStore(str(base)).store("secretdb", "x", "<a>s3xml</a>")
+    h = _handlers(spark, base, deny_databases=("secretdb",))
+    for q in ("xml:doc('secretdb','x')", "xml:doc('secretdb','x',1)"):
+        r = h.query({"query": q, "database": "testdb"})
+        assert r.is_error, q
+        assert "Access denied" in r.text
+        assert "s3xml" not in r.text
+
+
+def test_query_guard_allows_xml_reads_in_allowed_db(spark, base):
+    from sirix_spark.store.xmlstore import XmlStore
+
+    XmlStore(str(base)).store("xmldb", "x", "<a>open</a>")
+    XmlStore(str(base)).store("secretdb", "x", "<a>s3xml</a>")
+    h = _handlers(spark, base, deny_databases=("secretdb",))
+    for q in ("xml:doc('xmldb','x')", "xml:doc('xmldb','x',1)"):
+        r = h.query({"query": q, "database": "xmldb"})
+        assert not r.is_error, (q, r.text)
+        assert "<a>open</a>" in r.text
+
+
+def test_query_readonly_blocks_xml_store_inside_query(ro):
+    r = ro.query({"query": "xml:store('newdb','x','<a/>')", "database": "testdb"})
+    assert r.is_error
+    assert "read-only" in r.text
+
+
 def test_query_readonly_blocks_update_inside_query(ro):
     r = ro.query(
         {

@@ -1,11 +1,15 @@
-"""cum/ — the cumulative since-checkpoint delta a delta commit writes.
+"""The change set since the checkpoint — the latest-wins merge of every
+change since it — that doc(r) applies to the checkpoint at every
+revision (checkpoint ⋉̸ cum ∪ cum.live).
 
-doc(r) through cum/ (checkpoint ⋉̸ cum ∪ cum.live) must equal the
-union merge it replaces at every revision: rows, columns, column order
-and types. The union merge is obtained by opening a copy of the store
-whose manifest has every `schemas["cum"]` stripped, which is how a
-resource committed before cum/ existed looks. Keys are unique within
-each commit (a commit holding one key twice is a separate open rule).
+doc(r) must equal a plain-Python replay of the same operations at
+every revision: rows, columns, column order and types. That holds for
+the change sets delta commits record as cum/, and for a copy of the
+store whose manifest has every `schemas["cum"]` stripped — how a
+resource committed before cum/ existed looks — whose change sets are
+merged from each cycle's upserts/ and deletes/ when read. Keys are
+unique within each commit (a commit that repeats one is rejected,
+tests/test_store_unique_keys.py).
 """
 
 from __future__ import annotations
@@ -21,6 +25,83 @@ from sirix_spark.store import VersionedStore
 
 DB, RES = "db", "r"
 SCHEMA = "id long, name string, amount long"
+_TYPES = {"long": "bigint", "int": "int", "string": "string", "double": "double"}
+
+INIT = [(i, f"n{i}", i * 10) for i in range(10)]
+# r2…r17 with checkpoint_every=6: every way a change set grows or
+# restarts — upserts, a delete, a delete of a key only the change set
+# holds, re-inserting deleted keys, schema growth and reordered
+# columns mid-cycle, a change set that starts with a delete, cadence
+# checkpoints (r6, r12), rename_field, revert_to and compact
+OPS = [
+    ("upsert", [(1, "a", 11), (10, "n10", 100)], SCHEMA),  # r2
+    ("delete", [2]),  # r3
+    # r4: schema growth mid-cycle; re-inserts deleted key 2
+    ("upsert", [(2, "back", 22, "x"), (11, "n11", 110, "y")], SCHEMA + ", tag string"),
+    ("delete", [11]),  # r5: a key only the change set holds
+    ("upsert", [(4, "d", 44, "z")], SCHEMA + ", tag string"),  # r6: cadence checkpoint
+    ("delete", [10]),  # r7: a change set starting with a delete
+    (  # r8: reordered columns, a new one, deleted key 10 back
+        "upsert",
+        [(10, 1.5, "again", 101, "w"), (12, 2.5, "n12", 120, None)],
+        "id long, score double, name string, amount long, tag string",
+    ),
+    ("rename", "amount", "total"),  # r9
+    ("upsert", [(3, "c", 33)], "id long, name string, total long"),  # r10
+    ("revert", 4),  # r11
+    ("upsert", [(5, "e", 55)], SCHEMA),  # r12: cadence checkpoint
+    ("upsert", [(6, "f", 66), (13, "n13", 130)], SCHEMA),  # r13
+    ("compact",),  # r14
+    ("upsert", [(7, "g", 77, 7)], SCHEMA + ", extra int"),  # r15
+    ("delete", [7, 13]),  # r16
+    ("upsert", [(13, "h", 130, 8)], SCHEMA + ", extra int"),  # r17
+]
+
+
+def _columns(schema):
+    """(name, Spark dtype) of a schema string, `id` as record_key."""
+    cols = [c.split() for c in schema.split(",")]
+    return [("record_key" if n == "id" else n, _TYPES[t]) for n, t in cols]
+
+
+def _replay(ops):
+    """The state at every revision, replayed in plain Python: its
+    columns in order with their types, and its records by key. An
+    upsert replaces a whole record and appends the columns it brings
+    to the end."""
+    cols = _columns(SCHEMA)
+    states = [(cols, {r[0]: dict(zip([n for n, _ in cols], r)) for r in INIT})]
+    for op, *args in ops:
+        cols, rows = list(states[-1][0]), {k: dict(v) for k, v in states[-1][1].items()}
+        if op == "upsert":
+            up = _columns(args[1])
+            cols += [c for c in up if c[0] not in dict(cols)]
+            for r in args[0]:
+                rows[r[0]] = dict(zip([n for n, _ in up], r))
+        elif op == "delete":
+            for k in args[0]:
+                rows.pop(k)
+        elif op == "rename":
+            old, new = args
+            cols = [(new if n == old else n, t) for n, t in cols]
+            rows = {k: {(new if c == old else c): v for c, v in r.items()} for k, r in rows.items()}
+        elif op == "revert":
+            cols, rows = states[args[0] - 1]
+        states.append((cols, rows))
+    return states
+
+
+def _apply(store, spark, op, *args):
+    if op == "upsert":
+        store.upsert_records(DB, RES, spark.createDataFrame(args[0], args[1]), key="id")
+    elif op == "delete":
+        store.delete_where(DB, RES, F.col("record_key").isin(*args[0]))
+    elif op == "rename":
+        store.rename_field(DB, RES, *args)
+    elif op == "revert":
+        store.revert_to(DB, RES, *args)
+    else:
+        store.compact(DB, RES)
 
 
 def _upsert(store, spark, rows, schema=SCHEMA):
@@ -45,46 +126,12 @@ def _legacy(store, tmp_path):
     return VersionedStore(store.spark, root, checkpoint_every=store.checkpoint_every)
 
 
-def _assert_same(got, want, where):
-    assert got.columns == want.columns, where
-    assert got.dtypes == want.dtypes, where
-    assert _rows(got) == _rows(want), where
-
-
 @pytest.fixture(scope="module")
 def history(spark, tmp_path_factory):
-    """Every way a cum/ chain grows or restarts: upserts, a delete, a
-    delete of a key only the chain holds, re-inserting deleted keys,
-    schema growth and reordered columns mid-cycle, a chain that starts
-    with a delete, a cadence checkpoint, rename_field, revert_to and
-    compact."""
     store = VersionedStore(spark, str(tmp_path_factory.mktemp("cum_store")), checkpoint_every=6)
-    store.store(
-        DB, RES,
-        spark.createDataFrame([(i, f"n{i}", i * 10) for i in range(10)], SCHEMA),
-        key="id",
-    )
-    _upsert(store, spark, [(1, "a", 11), (10, "n10", 100)])  # r2
-    store.delete_where(DB, RES, F.col("record_key") == 2)  # r3
-    _upsert(  # r4: schema growth mid-cycle; re-inserts deleted key 2
-        store, spark, [(2, "back", 22, "x"), (11, "n11", 110, "y")], SCHEMA + ", tag string"
-    )
-    store.delete_where(DB, RES, F.col("record_key") == 11)  # r5: a key only cum/ holds
-    _upsert(store, spark, [(4, "d", 44, "z")], SCHEMA + ", tag string")  # r6: cadence checkpoint
-    store.delete_where(DB, RES, F.col("record_key") == 10)  # r7: a chain starting with a delete
-    _upsert(  # r8: reordered columns, a new one, deleted key 10 back
-        store, spark, [(10, 1.5, "again", 101, "w"), (12, 2.5, "n12", 120, None)],
-        "id long, score double, name string, amount long, tag string",
-    )
-    store.rename_field(DB, RES, "amount", "total")  # r9
-    _upsert(store, spark, [(3, "c", 33)], "id long, name string, total long")  # r10
-    store.revert_to(DB, RES, 4)  # r11
-    _upsert(store, spark, [(5, "e", 55)])  # r12: cadence checkpoint
-    _upsert(store, spark, [(6, "f", 66), (13, "n13", 130)])  # r13
-    store.compact(DB, RES)  # r14
-    _upsert(store, spark, [(7, "g", 77, 7)], SCHEMA + ", extra int")  # r15
-    store.delete_where(DB, RES, F.col("record_key").isin(7, 13))  # r16
-    _upsert(store, spark, [(13, "h", 130, 8)], SCHEMA + ", extra int")  # r17
+    store.store(DB, RES, spark.createDataFrame(INIT, SCHEMA), key="id")
+    for op in OPS:
+        _apply(store, spark, *op)
     return store
 
 
@@ -100,11 +147,17 @@ def test_cum_written_by_every_delta(history):
         assert (e.schema("cum") is not None) == has_dir == (e.kind == "delta"), e.revision
 
 
-def test_doc_equals_union_merge_at_every_revision(history, tmp_path):
+def test_doc_equals_replay_at_every_revision(history, tmp_path):
     legacy = _legacy(history, tmp_path)
     assert all(e.schema("cum") is None for e in legacy._manifest(DB, RES).entries)
-    for r in range(1, history.latest_revision(DB, RES) + 1):
-        _assert_same(history.doc(DB, RES, revision=r), legacy.doc(DB, RES, revision=r), r)
+    for r, (cols, rows) in enumerate(_replay(OPS), start=1):
+        want = sorted(
+            json.dumps({n: rec.get(n) for n, _ in cols}, sort_keys=True) for rec in rows.values()
+        )
+        for store in (history, legacy):
+            got = store.doc(DB, RES, revision=r)
+            assert got.dtypes == cols, (store is legacy, r)
+            assert _rows(got) == want, (store is legacy, r)
 
 
 def test_cum_holds_latest_change_per_key(history):
@@ -117,13 +170,12 @@ def test_cum_holds_latest_change_per_key(history):
 
 def test_change_views_and_diffs_unchanged(history, tmp_path):
     """The per-revision parts stay the source of change_view and
-    history_view; diffs read doc() and match the union merge's.
-    The views stop before r11: change_view recovers the revert's delta
-    with an exceptAll, which fails when the revert drops columns."""
+    history_view, and diffs read doc(): all equal with or without
+    recorded cum/ parts."""
     legacy = _legacy(history, tmp_path)
     for view in ("change_view", "history_view"):
-        got = getattr(history, view)(DB, RES, max_revision=10)
-        assert _rows(got) == _rows(getattr(legacy, view)(DB, RES, max_revision=10)), view
+        got = getattr(history, view)(DB, RES, max_revision=None)
+        assert _rows(got) == _rows(getattr(legacy, view)(DB, RES, max_revision=None)), view
     # record mode takes its columns from the older side, so it cannot
     # diff backwards across a schema growth (r5 → r2) in either store
     for r1, r2, modes in (
@@ -136,9 +188,10 @@ def test_change_views_and_diffs_unchanged(history, tmp_path):
             ), (r1, r2, mode)
 
 
-def test_delta_after_legacy_delta_writes_no_cum(spark, tmp_path):
-    """A delta committed before cum/ existed ends the chain for the
-    rest of its cycle; the next checkpoint starts a new one."""
+def test_delta_after_legacy_delta_writes_cum(spark, tmp_path):
+    """A delta committed before cum/ existed has no change set on disk:
+    the next delta merges the cycle's parts into its cum/, and the
+    legacy one is read through the same merge."""
     store = VersionedStore(spark, str(tmp_path / "s"), checkpoint_every=5)
     store.store(DB, RES, spark.createDataFrame([(0, "a", 0), (1, "b", 1)], SCHEMA), key="id")
     _upsert(store, spark, [(2, "c", 2)])  # r2
@@ -154,18 +207,59 @@ def test_delta_after_legacy_delta_writes_no_cum(spark, tmp_path):
     _upsert(store, spark, [(5, "f", 5)])  # r6
     m = store._manifest(DB, RES)
     assert [m.entry(r).schema("cum") is not None for r in range(1, 7)] == [
-        False, False, False, False, False, True,
+        False, False, True, True, False, True,
     ]
-    for r in (3, 4):
-        assert not os.path.isdir(os.path.join(store._rev_dir(DB, RES, r), "cum"))
+    cum = store._read_part(DB, RES, m.entry(4), "cum")
+    got = {r["record_key"]: (r["_revision"], r["_deleted"]) for r in cum.collect()}
+    assert got == {2: (2, False), 3: (3, False), 0: (4, True)}
     assert [
         sorted(x["record_key"] for x in store.doc(DB, RES, revision=r).collect())
         for r in range(1, 7)
     ] == [[0, 1], [0, 1, 2], [0, 1, 2, 3], [1, 2, 3], [1, 2, 3, 4], [1, 2, 3, 4, 5]]
 
 
+def test_empty_commit_after_checkpoint_keeps_cum(spark, tmp_path):
+    """A commit that changes nothing right after a checkpoint has no
+    change set to record, and the deltas after it still record theirs:
+    doc(r) has no window at any depth."""
+    store = VersionedStore(spark, str(tmp_path / "s"))
+    store.store(
+        DB, RES, spark.createDataFrame([(i, f"n{i}", i) for i in range(50)], SCHEMA), key="id"
+    )
+    store.delete_where(DB, RES, F.col("record_key") == -1)  # r2: matches nothing
+    for r in range(3, 10):
+        _upsert(store, spark, [(100 + r, f"n{r}", r), (r, "u", -r)])
+    m = store._manifest(DB, RES)
+    assert (m.entry(2).n_upserts, m.entry(2).n_deletes) == (0, 0)
+    assert [m.entry(r).schema("cum") is not None for r in range(2, 10)] == [False] + [True] * 7
+    for r in range(2, 10):
+        assert "Window" not in _plan(store.doc(DB, RES, revision=r)), r
+    assert _rows(store.doc(DB, RES, revision=2)) == _rows(store.doc(DB, RES, revision=1))
+    doc9 = {x["record_key"]: x["amount"] for x in store.doc(DB, RES, revision=9).collect()}
+    assert len(doc9) == 57
+    assert [doc9[r] for r in range(3, 10)] == [-r for r in range(3, 10)]
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _windowed_parts(df) -> set[str]:
+    """The parts (rNNNNNN/<part>) that df's optimized plan scans below
+    a Window."""
+    out = set()
+
+    def walk(node, windowed):
+        windowed = windowed or node.nodeName() == "Window"
+        if windowed and node.nodeName() == "LogicalRelation":
+            path = node.relation().location().rootPaths().apply(0).toString()
+            out.add("/".join(path.rstrip("/").split("/")[-2:]))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), windowed)
+
+    walk(df._jdf.queryExecution().optimizedPlan(), False)
+    return out
 
 
 def test_open_plan_flat_in_depth(spark, tmp_path):
@@ -182,6 +276,12 @@ def test_open_plan_flat_in_depth(spark, tmp_path):
         plan = _plan(store.doc(DB, RES, revision=r))
         assert plan.count("Relation [") == 3, (r, plan)
         assert "Window" not in plan, r
-    # the union merge it replaces scans one part more per depth
+    # without cum/, the change set is merged from the cycle's parts
+    # (read for its keys and for its rows): the window is over them,
+    # never over the checkpoint
     legacy = _legacy(store, tmp_path)
-    assert [_plan(legacy.doc(DB, RES, revision=r)).count("Relation [") for r in (2, 9)] == [2, 9]
+    for r, scans in ((2, 3), (9, 17)):
+        doc = legacy.doc(DB, RES, revision=r)
+        assert _plan(doc).count("Relation [") == scans, r
+        parts = _windowed_parts(doc)
+        assert parts and all(p.endswith(("/upserts", "/deletes")) for p in parts), (r, parts)

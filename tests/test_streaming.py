@@ -53,6 +53,28 @@ def test_stream_ingest_commits_revisions(spark, tmp_path):
     assert store.doc("db", "events", revision=1).count() == 2
 
 
+def test_stream_batch_with_repeated_key_commits_nothing(spark, tmp_path):
+    """A micro-batch is one commit, and a commit holds each key at
+    most once: a batch that repeats one fails the query and leaves the
+    head where it was."""
+    from pyspark.errors import StreamingQueryException
+
+    store = VersionedStore(spark, str(tmp_path / "store"))
+    store.store("db", "events", spark.createDataFrame([(1, "v1")], "id long, v string"), key="id")
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    (inbox / "b1.json").write_text(
+        "\n".join(json.dumps({"id": 2, "v": v}) for v in ("a", "b"))
+    )
+    q = stream_ingest(
+        spark, store, str(inbox), "id long, v string", "db", "events", "id",
+        str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(StreamingQueryException, match="record_key 2 occurs twice"):
+        q.awaitTermination(60)
+    assert store.latest_revision("db", "events") == 1
+
+
 def test_windowed_counts_batch_parity(spark, sf_dir):
     from sirix_spark.tables import load
 

@@ -2,7 +2,7 @@
 Old: per-iteration labels join for the changed-count.
 New: previous label rides through the aggregate (_min_label_propagate).
 Counts Spark jobs via job groups and times each side, alternating
-within ONE session (same protocol as tools/ab_toggle.py).
+within ONE session.
 """
 import sys, time
 sys.path.insert(0, "/root/repo")
