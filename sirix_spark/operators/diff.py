@@ -2,35 +2,39 @@
 the reference's BasicJsonDiff.java:21 / JsonDiffSerializer.java (a
 changed leaf yields ONE op for that leaf, not a whole-record update).
 
-Spark-first design: no recursion and no Python. The plan has three
-steps, and its size is fixed by `max_depth`, never by the data:
+Spark-first design: no recursion, no Python and no join. Like the
+reference, the diff walks the two documents together and skips equal
+subtrees; the walk is level by level, so the plan's size is fixed by
+`max_depth`, never by the data:
 
 1. Prune. Rows whose old and new documents are equal (`eqNullSafe`)
    cannot yield an op, so they are dropped before anything is
-   flattened; an update that touches 1% of the records flattens 1%.
-2. Flatten, one generator per side. Each document becomes an array of
-   its (path, kind, value) nodes, built level by level from JVM
-   higher-order functions: `from_json(js, 'map<string,string>')`
-   keeps nested objects/arrays as their JSON text, so the children of
-   a level are one `transform` over that level's entries. Object and
-   array entries are unified into one (key, text) array *before* the
-   next level recurses (two branches per level would make the
-   expression exponential in depth). Each level is its own column, so
-   it is computed once however many later levels read it. One
-   `inline` then emits every node of the document.
-3. Match. Old and new nodes meet in one full-outer join on
-   (id, path); op classification is a projection, and redundant-child
-   suppression is one more join of each candidate op to its parent.
+   parsed; an update that touches 1% of the records walks 1%.
+2. Walk. Level 0 is the (path '', old, new) root pair; level d pairs
+   up the children of the level d-1 pairs that are present on both
+   sides, have the same internal kind and different text, with one
+   `map_zip_with` of the two sides' child maps. `from_json(js,
+   'map<string,string>')` keeps nested objects/arrays as their JSON
+   text, and array positions become '[i]' map keys, so objects and
+   arrays share one expression. Each child is wrapped in a struct, so
+   a present JSON null (a struct holding NULL) stays apart from an
+   absent key (a NULL struct). Each level is its own column, computed
+   once however many later levels read it.
+3. Classify and emit. Each pair gets its op from one `CASE`, and one
+   `inline` emits the pairs that have an op. A one-sided pair or a
+   kind change is never expanded, so only the top-most op of a
+   subtree exists: no suppression step. Each side's children are
+   matched within their own parent, so a key holding '/' or '[i]'
+   that gives two nodes the same path cannot cross-match them.
 
-Cost model: per document, O(size × depth) bytes of JSON parsing
-(each internal node's text is parsed once, at its own level) plus
-O(nodes) array work — no per-key lookups, so a single document with
-tens of thousands of keys stays linear. Across documents: one shuffle
-by (id, path) for the match and one by (id, parent path) for the
-suppression, over the changed documents only. Plan size grows with
-max_depth (one projection per level), never with the data. The
-suppression join reads the matched node set a second time, so each
-side is flattened twice.
+Cost model: per changed document, O(size × depth) bytes of JSON
+parsing, but only along differing paths (each internal node's text is
+parsed once, at its own level, and only if its two sides differ), plus
+O(nodes) map work: `map_zip_with` indexes string keys by hash, so a
+single document with tens of thousands of keys stays linear. Across
+documents: no shuffle; the operator is one `Generate` over the rows
+whose documents differ. Plan size grows with max_depth (one projection
+per level), never with the data.
 
 Caveat (documented): scalar values are compared through the map's
 string coercion, so a *string* leaf whose content looks like a JSON
@@ -40,70 +44,37 @@ data interchange; the reference's node store has typed nodes instead.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MAX_DEPTH = 8
 
-# Children of an object or array node `n`: one (path, js) struct per
-# entry, array positions keyed '[i]'. Object and array entries are
-# unified into one array before the next level reads them; text that
-# does not parse has no children.
-_CHILDREN = """transform(
-  coalesce(
-    CASE WHEN startswith(n.js, '{')
-      THEN map_entries(from_json(n.js, 'map<string,string>'))
-      ELSE transform(from_json(n.js, 'array<string>'),
-                     (v, i) -> named_struct('key', concat('[', CAST(i AS STRING), ']'), 'value', v))
-    END,
-    CAST(array() AS array<struct<key:string,value:string>>)),
-  e -> named_struct('path', concat(n.path, '/', e.key), 'js', trim(e.value)))"""
+# Children of the JSON text `js` as map<key, struct<js>>, array
+# positions keyed '[i]'; text that does not parse has no children.
+_CHILDREN = """coalesce(
+  CASE WHEN startswith({js}, '{{')
+    THEN transform_values(from_json({js}, 'map<string,string>'), (k, v) -> named_struct('js', trim(v)))
+    ELSE map_from_entries(transform(from_json({js}, 'array<string>'),
+      (v, i) -> struct(concat('[', CAST(i AS STRING), ']'), named_struct('js', trim(v)))))
+  END,
+  CAST(map() AS map<string,struct<js:string>>))"""
 
-_INTERNAL = "startswith(n.js, '{') OR startswith(n.js, '[')"
+# The kind of a present node.
+_KIND = """CASE WHEN startswith({x}.js, '{{') THEN 'object'
+  WHEN startswith({x}.js, '[') THEN 'array' ELSE 'leaf' END"""
 
-_KIND = """CASE WHEN startswith(n.js, '{') THEN 'object'
-  WHEN startswith(n.js, '[') THEN 'array' ELSE 'leaf' END"""
+_OP = """CASE WHEN p.o IS NULL THEN 'insert' WHEN p.n IS NULL THEN 'delete'
+  WHEN {ko} != {kn} THEN 'replace'
+  WHEN {ko} = 'leaf' AND NOT (p.o.js <=> p.n.js) THEN 'update' END"""
 
 
-def flatten_json(
-    df: DataFrame,
-    id_cols: list[str],
-    js_col: str,
-    max_depth: int = MAX_DEPTH,
-) -> DataFrame:
-    """Explode a JSON string column into node rows
-    (ids..., path, kind, value):
-
-    - kind 'object'/'array': internal node, value = its raw JSON text
-      (kept so the differ can detect kind changes → 'replace');
-    - kind 'leaf': scalar/null, value = the scalar's string form.
-
-    Paths are '/'-joined keys with '[i]' for array positions, root is
-    ''. Rows with NULL js are dropped (absent document ≠ null leaf).
-    Depth is bounded: at max_depth any remaining subtree becomes a
-    leaf whose value is its JSON text (diff still sees changes, just
-    coarser below the bound).
-    """
-    ids = [f"`{c}`" for c in id_cols]
-    out = df.filter(F.col(js_col).isNotNull()).selectExpr(
-        *ids, f"array(named_struct('path', '', 'js', trim(`{js_col}`))) AS _l0"
-    )
-    for d in range(1, max_depth):
-        out = out.selectExpr(
-            "*",
-            f"flatten(transform(filter(_l{d - 1}, n -> {_INTERNAL}), n -> {_CHILDREN})) AS _l{d}",
-        )
-    # Nodes at the last level were never expanded: compare them as
-    # opaque leaves (value = JSON text) so changes below the bound
-    # still surface as an update.
-    kinds = [_KIND] * (max_depth - 1) + ["'leaf'"]
-    nodes = [
-        f"transform(_l{d}, n -> named_struct('path', n.path, 'kind', {kind}, 'value', n.js))"
-        for d, kind in enumerate(kinds)
-    ]
-    return out.selectExpr(*ids, f"inline(concat({', '.join(nodes)}))")
+def _classify(pairs: str, last: bool) -> str:
+    """`pairs` (path, o, n) with each pair's op, NULL for none. On the
+    `last` level every node is an opaque leaf (value = its JSON text),
+    so changes below the depth bound still surface as an update."""
+    ko, kn = ("'leaf'", "'leaf'") if last else (_KIND.format(x="p.o"), _KIND.format(x="p.n"))
+    op = _OP.format(ko=ko, kn=kn)
+    return f"transform({pairs}, p -> named_struct('path', p.path, 'o', p.o, 'n', p.n, 'op', {op}))"
 
 
 def json_node_diff(
@@ -125,59 +96,44 @@ def json_node_diff(
 
     Parity: BasicJsonDiff.java:21 emits exactly these four op types
     with nodeKeys+paths; JsonDiffSerializer.java is the wire shape
-    (see Store.diff_json). Suppression logic: a one-side-only node is
-    redundant iff its parent is also one-side-only (the parent op
-    already carries the subtree) or its parent changed kind (the
-    parent's 'replace' carries it) — an immediate-parent check is
-    sufficient by induction, so ONE extra self-join, not a recursive
-    prefix walk.
+    (see Store.diff_json). Paths are '/'-joined keys with '[i]' for
+    array positions, root ''; a NULL document is absent (its root is
+    inserted or deleted), not a null leaf. Internal nodes carry their
+    JSON text as their value; below `max_depth` levels a subtree is
+    compared as one leaf holding its text.
     """
-    changed = df.filter(~F.col(old_col).eqNullSafe(F.col(new_col)))
-    o = flatten_json(changed, id_cols, old_col, max_depth).withColumnsRenamed(
-        {"kind": "old_kind", "value": "old_value"}
-    )
-    n = flatten_json(changed, id_cols, new_col, max_depth).withColumnsRenamed(
-        {"kind": "new_kind", "value": "new_value"}
-    )
-    j = o.join(n, [*id_cols, "path"], "full_outer")
-
-    op = (
-        F.when(F.col("old_kind").isNull(), F.lit("insert"))
-        .when(F.col("new_kind").isNull(), F.lit("delete"))
-        .when(F.col("old_kind") != F.col("new_kind"), F.lit("replace"))
-        .when(
-            (F.col("old_kind") == "leaf")
-            & ~F.col("old_value").eqNullSafe(F.col("new_value")),
-            F.lit("update"),
+    ids = [f"`{c}`" for c in id_cols]
+    root = "CASE WHEN `{c}` IS NOT NULL THEN named_struct('js', trim(`{c}`)) END"
+    out = df.filter(~F.col(old_col).eqNullSafe(F.col(new_col))).selectExpr(
+        *ids,
+        _classify(
+            f"array(named_struct('path', '', 'o', {root.format(c=old_col)}, "
+            f"'n', {root.format(c=new_col)}))",
+            max_depth == 1,
         )
+        + " AS _l0",
     )
-    cand = j.select(*id_cols, "path", op.alias("op"), "old_value", "new_value").filter(
-        F.col("op").isNotNull()
-    )
-
-    # Parent lookup for suppression: keep insert/delete only when the
-    # parent exists on both sides with an unchanged kind (root nodes,
-    # parent '', have no parent row → whole-document ops are kept).
-    parent = F.when(
-        F.col("path") != "", F.regexp_replace("path", "/[^/]*$", "")
-    )
-    parents = j.select(
-        *[F.col(c).alias(f"_p_{c}") for c in id_cols],
-        F.col("path").alias("_p_path"),
-        F.col("old_kind").alias("_p_old_kind"),
-        F.col("new_kind").alias("_p_new_kind"),
-    )
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(c) == F.col(f"_p_{c}") for c in id_cols],
-    ) & (parent == F.col("_p_path"))
-    keep = cand.join(parents, cond, "left").filter(
-        (~F.col("op").isin("insert", "delete"))
-        | F.col("_p_path").isNull()  # root-level op
-        | (
-            F.col("_p_old_kind").isNotNull()
-            & F.col("_p_new_kind").isNotNull()
-            & (F.col("_p_old_kind") == F.col("_p_new_kind"))
+    for d in range(1, max_depth):
+        children = (
+            f"map_values(map_zip_with({_CHILDREN.format(js='p.o.js')}, "
+            f"{_CHILDREN.format(js='p.n.js')}, "
+            "(k, a, b) -> named_struct('path', concat(p.path, '/', k), 'o', a, 'n', b)))"
         )
+        # A pair with no op is present on both sides with the same
+        # kind; it is expanded if that kind is internal and its text
+        # differs.
+        expand = f"p.op IS NULL AND {_KIND.format(x='p.o')} != 'leaf' AND p.o.js != p.n.js"
+        out = out.selectExpr(
+            "*",
+            _classify(
+                f"flatten(transform(filter(_l{d - 1}, p -> {expand}), p -> {children}))",
+                d == max_depth - 1,
+            )
+            + f" AS _l{d}",
+        )
+    levels = ", ".join(f"_l{d}" for d in range(max_depth))
+    return out.selectExpr(
+        *ids,
+        f"inline(transform(filter(concat({levels}), p -> p.op IS NOT NULL), "
+        "p -> named_struct('path', p.path, 'op', p.op, 'old_value', p.o.js, 'new_value', p.n.js)))",
     )
-    return keep.select(*id_cols, "path", "op", "old_value", "new_value")

@@ -533,9 +533,9 @@ class DocumentStore(TextRevisionStore):
         {"delete":{...}},{"update":{...}},{"replace":{...}}]}``.
 
         The op set comes from the same set-based differ the record
-        store uses (operators/diff.py — full-outer join over flattened
-        node rows, parent-suppressed); nodeKeys are this store's
-        pre-order keys resolved per revision."""
+        store uses (operators/diff.py — one level-by-level walk of both
+        documents that skips equal subtrees); nodeKeys are this
+        store's pre-order keys resolved per revision."""
         from sirix_spark.operators.diff import json_node_diff
 
         old_text = self.read_text(db, res, r1)

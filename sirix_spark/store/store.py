@@ -662,7 +662,8 @@ class VersionedStore:
         single changed leaf in a large record yields one leaf op, not
         a whole-record update. Built on the generic JSON node differ
         (operators/diff.py): record payloads are serialized per key
-        and flattened JVM-side; one shuffle on (record key, path)."""
+        and the two sides of each changed record are walked together
+        JVM-side; the differ adds no shuffle of its own."""
         from sirix_spark.operators.diff import json_node_diff
 
         joined = self._diff_docs(db, res, r1, r2, sort=True)
@@ -681,8 +682,10 @@ class VersionedStore:
         if mode == "node":
             # Sorted on the driver, where the ops land anyway: a Spark
             # orderBy would add a range-partition sampling job and a
-            # shuffle. (key, path) is unique per op; NULLs first, as
-            # in Spark's ascending order.
+            # shuffle. NULLs first, as in Spark's ascending order. Two
+            # ops share a (key, path) only where a key holding '/' or
+            # '[i]' gives two nodes one path; the stable sort keeps
+            # them in the differ's order.
             rows = sorted(
                 self.node_diff(db, res, r1, r2).collect(),
                 key=lambda r: (r[RECORD_KEY] is not None, r[RECORD_KEY], r["path"]),

@@ -90,20 +90,21 @@ def model_diff(old, new, max_depth=MAX_DEPTH):
 
 
 def expected_ops(pairs, max_depth=MAX_DEPTH):
-    """{(id, path): (op, old, new)} the operator must return for
-    {id: (old_doc, new_doc)}; None is an absent document."""
-    out = {}
+    """Sorted (id, path, op, old, new) rows the operator must return
+    for {id: (old_doc, new_doc)}; None is an absent document. A list,
+    not a map by (id, path): a key holding '/' or '[i]' can give two
+    nodes the same path, and a duplicate row must not collapse."""
+    out = []
     for i, (o, n) in pairs.items():
         if o is None and n is None:
             continue
         if o is None:
-            out[(i, "")] = ("insert", None, _jtext(n))
+            out.append((i, "", "insert", None, _jtext(n)))
         elif n is None:
-            out[(i, "")] = ("delete", _jtext(o), None)
+            out.append((i, "", "delete", _jtext(o), None))
         else:
-            for path, op, ov, nv in model_diff(o, n, max_depth):
-                out[(i, path)] = (op, ov, nv)
-    return out
+            out += [(i, *op) for op in model_diff(o, n, max_depth)]
+    return sorted(out, key=repr)
 
 
 def run_diff(spark, pairs, max_depth=MAX_DEPTH):
@@ -113,10 +114,10 @@ def run_diff(spark, pairs, max_depth=MAX_DEPTH):
     ]
     df = spark.createDataFrame(rows, "id long, old_doc string, new_doc string")
     out = json_node_diff(df, ["id"], "old_doc", "new_doc", max_depth=max_depth)
-    return {
-        (r["id"], r["path"]): (r["op"], r["old_value"], r["new_value"])
-        for r in out.collect()
-    }
+    return sorted(
+        ((r["id"], r["path"], r["op"], r["old_value"], r["new_value"]) for r in out.collect()),
+        key=repr,
+    )
 
 
 CASES = {
@@ -130,6 +131,15 @@ CASES = {
     7: (None, {"fresh": True}),                                     # whole-doc insert
     8: ({"gone": [1]}, None),                                       # whole-doc delete
     9: ({"same": {"s": [1, {"t": "u"}]}}, {"same": {"s": [1, {"t": "u"}]}}),  # no ops
+    # an object key '[0]' and array position 0 share the path /[0]:
+    # the root replace carries the subtree, no child op leaks
+    10: ({"[0]": 5}, [6]),
+    11: ({"[0]": {"a": 1}}, [[1]]),
+    # a key holding '/' shares the path /a/b with a nested key: one
+    # update, old and new matched within their own parent
+    12: ({"a/b": 1, "a": {"b": 2}}, {"a/b": 1, "a": {"b": 3}}),
+    # a present JSON null is a node, an absent key is not
+    13: ({"a": None, "b": [None]}, {"b": []}),
 }
 
 
@@ -143,7 +153,9 @@ def test_node_diff_matches_model(diff_rows):
 
 
 # --- property test: random documents against the model --------------
-_KEYS = st.text(alphabet="abxy", min_size=1, max_size=2)
+# '/', '[', ']' and '0' let two nodes share a path ('a/b' beside
+# a → b, an object key '[0]' beside array position 0).
+_KEYS = st.text(alphabet="abxy/[]0", min_size=1, max_size=2)
 # Strings that look like JSON (valid, malformed, padded, empty
 # containers) exercise the documented string-as-subtree caveat.
 _JSONISH = st.sampled_from(
@@ -227,20 +239,19 @@ def test_node_diff_property(spark, pairs, max_depth):
 
 
 def test_node_diff_plan_shape(spark):
-    """Each side's nodes come from ONE generator over the (pruned)
-    input — no per-level union re-deriving the input plan. The parent
-    lookup joins the matched node set to itself, so the optimized plan
-    holds two copies of the (id, path) full-outer join, each fed by
-    exactly one Generate per side."""
+    """The two documents are walked together, so the ops come from ONE
+    generator over the (pruned) input: no join matching the sides, no
+    per-level union re-deriving the input plan, no exchange."""
     rows = [(1, _jtext(o), _jtext(n)) for o, n in [CASES[1], CASES[6]]]
     df = spark.createDataFrame(rows, "id long, old_doc string, new_doc string")
     plan = json_node_diff(df, ["id"], "old_doc", "new_doc")._jdf.queryExecution()
     text = plan.optimizedPlan().toString()
+    assert "Join" not in text
     assert "Union" not in text
-    assert text.count("FullOuter") == 2
-    assert text.count("Generate inline") == 4
-    # the prune: each side flattens only rows whose documents differ
-    assert text.count("Filter (NOT (old_doc#") == 4
+    assert text.count("Generate inline") == 1
+    # the prune: only rows whose documents differ are walked
+    assert text.count("Filter NOT (old_doc#") == 1
+    assert "Exchange" not in plan.executedPlan().toString()
 
 
 def test_store_node_diff_wire_shape(spark, tmp_path):
